@@ -1,11 +1,9 @@
 package graft
 
-import graft.functions.{BloomMightContain, DotProduct, HyperplaneBuckets, MinHashSig, SimHash64, SpaceSavingTopK, ThetaAnotBOp, ThetaEstimate, ThetaIntersectOp, ThetaSketchAgg, ThetaUnionOp, WinnowMins}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Production registration path for graft's native expressions:
+/** Production registration path for graft's native expressions and plans:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
@@ -13,20 +11,26 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * makes the graft_* functions available to every session (SQL and
-  * DataFrame API) without the per-session `GraftFunctions.register` call
-  * the operators use as a fallback. The injected surface is: ten scalar
-  * expressions plus two native aggregates (the Space-Saving heavy-hitters
-  * sketch and the theta distinct-set sketch, both
-  * TypedImperativeAggregates), and TWO planner strategies — the
-  * native as-of join ([[graft.plans.AsofJoinStrategy]]) and the native band
-  * join ([[graft.plans.RangeJoinStrategy]]); per-session fallbacks
-  * `graft.plans.Asof.ensureRegistered` / `graft.plans.Band.ensureRegistered`
-  * use the public `experimental.extraStrategies` hook. Everything else in
-  * SURVEY §2 plans through Catalyst's built-in operators — §4.3's audit
-  * still holds for the declarative surface; the strategies exist for the
-  * two operator shapes (as-of, sliding-band) OSS Spark has no bounded-state
-  * physical operator for.
+  * The injected surface is:
+  *  - the `graft_*` SQL functions, i.e. [[graft.functions.GraftFunctions.table]]:
+  *    ten scalar expressions plus two native aggregates (the Space-Saving
+  *    heavy-hitters sketch and the theta distinct-set sketch, both
+  *    TypedImperativeAggregates). DataFrame code does not need them: the
+  *    `GraftFunctions` Column helpers build the expressions directly. On a
+  *    session built without this class, `GraftFunctions.register` installs
+  *    the same table for SQL callers;
+  *  - TWO planner strategies, the native as-of join
+  *    ([[graft.plans.AsofJoinStrategy]]) and the native band join
+  *    ([[graft.plans.RangeJoinStrategy]]), with the MV-navigation and
+  *    band-rewrite optimizer rules and the two join TVFs. The operators
+  *    install the strategy they need per session through
+  *    `graft.plans.Asof.ensureRegistered` / `graft.plans.Band.ensureRegistered`,
+  *    which use the public `experimental.extraStrategies` hook.
+  *
+  * Everything else in SURVEY §2 plans through Catalyst's built-in operators —
+  * §4.3's audit still holds for the declarative surface; the strategies
+  * exist for the two operator shapes (as-of, sliding-band) OSS Spark has no
+  * bounded-state physical operator for.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -42,46 +46,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectTableFunction((graft.plans.SqlTableFunctions.bandName,
       new ExpressionInfo(classOf[graft.plans.RangeJoin].getName, "graft_band_join"),
       graft.plans.SqlTableFunctions.bandBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (args: Seq[Expression]) => MinHashSig(args(0), graft.functions.GraftFunctions.intParam(args(1), "graft_minhash_sig"))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (args: Seq[Expression]) => SimHash64(args(0))))
-    ext.injectFunction((FunctionIdentifier("graft_winnow_mins"),
-      new ExpressionInfo(classOf[WinnowMins].getName, "graft_winnow_mins"),
-      (args: Seq[Expression]) => WinnowMins(args(0), graft.functions.GraftFunctions.intParam(args(1), "graft_winnow_mins"))))
-    ext.injectFunction((FunctionIdentifier("graft_heavy_hitters"),
-      new ExpressionInfo(classOf[SpaceSavingTopK].getName, "graft_heavy_hitters"),
-      (args: Seq[Expression]) => SpaceSavingTopK(args(0),
-        graft.functions.GraftFunctions.intParam(args(1), "graft_heavy_hitters"))))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_might_contain"),
-      (args: Seq[Expression]) => BloomMightContain(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_hyperplane_buckets"),
-      new ExpressionInfo(classOf[HyperplaneBuckets].getName, "graft_hyperplane_buckets"),
-      (args: Seq[Expression]) => HyperplaneBuckets(args(0),
-        graft.functions.GraftFunctions.intParam(args(1), "graft_hyperplane_buckets"),
-        graft.functions.GraftFunctions.intParam(args(2), "graft_hyperplane_buckets"))))
-    ext.injectFunction((FunctionIdentifier("graft_theta_sketch"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "graft_theta_sketch"),
-      (args: Seq[Expression]) => ThetaSketchAgg(args(0),
-        graft.functions.GraftFunctions.intParam(args(1), "graft_theta_sketch"))))
-    ext.injectFunction((FunctionIdentifier("graft_theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "graft_theta_estimate"),
-      (args: Seq[Expression]) => ThetaEstimate(args(0))))
-    ext.injectFunction((FunctionIdentifier("graft_theta_union"),
-      new ExpressionInfo(classOf[ThetaUnionOp].getName, "graft_theta_union"),
-      (args: Seq[Expression]) => ThetaUnionOp(args(0), args(1),
-        graft.functions.GraftFunctions.intParam(args(2), "graft_theta_union"))))
-    ext.injectFunction((FunctionIdentifier("graft_theta_intersect"),
-      new ExpressionInfo(classOf[ThetaIntersectOp].getName, "graft_theta_intersect"),
-      (args: Seq[Expression]) => ThetaIntersectOp(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_theta_anotb"),
-      new ExpressionInfo(classOf[ThetaAnotBOp].getName, "graft_theta_anotb"),
-      (args: Seq[Expression]) => ThetaAnotBOp(args(0), args(1))))
+    graft.functions.GraftFunctions.table.foreach(ext.injectFunction)
   }
 }

@@ -25,7 +25,7 @@ object GraftSession {
   def local(threads: Int = 32): SparkSession = {
     val s = builder(s"local[$threads]", threads).getOrCreate()
     // getOrCreate can return a pre-existing session whose extensions were
-    // fixed at creation — the temp-function fallback covers that path.
+    // fixed at creation; register gives its SQL the graft_* functions too.
     graft.functions.GraftFunctions.register(s)
     s
   }

@@ -1,11 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.PlanBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: dot product of two ArrayType(DoubleType)
@@ -63,13 +65,13 @@ object DotProduct {
   }
 }
 
-/** Registration + Column-level entry points for graft's native expressions. */
+/** The SQL table and the Column entry points for graft's native expressions. */
 object GraftFunctions {
 
   /** Resolve a parameter that must be a foldable integer (e.g. numPerm) —
     * a clear error beats a ClassCastException from a blind eval cast when a
     * SQL user passes a column or a BIGINT literal. */
-  private[graft] def intParam(e: Expression, fn: String): Int = {
+  private def intParam(e: Expression, fn: String): Int = {
     if (!e.foldable)
       throw new IllegalArgumentException(s"$fn: parameter must be a literal integer, got ${e.sql}")
     e.eval() match {
@@ -82,91 +84,76 @@ object GraftFunctions {
     }
   }
 
+  /** One SQL function: `build` gets the call's arguments and `int(i)`, the
+    * i-th argument checked by [[intParam]]. */
+  private def fn(name: String, cls: Class[_ <: Expression])(
+      build: (Seq[Expression], Int => Int) => Expression)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => build(args, i => intParam(args(i), name)))
+
+  /** Every `graft_*` SQL function, defined once: [[graft.GraftExtensions]]
+    * injects this table into new sessions and [[register]] installs it into
+    * an existing one. */
+  val table: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_dot", classOf[DotProduct])((a, _) => DotProduct(a(0), a(1))),
+    fn("graft_minhash_sig", classOf[MinHashSig])((a, int) => MinHashSig(a(0), int(1))),
+    fn("graft_simhash64", classOf[SimHash64])((a, _) => SimHash64(a(0))),
+    fn("graft_winnow_mins", classOf[WinnowMins])((a, int) => WinnowMins(a(0), int(1))),
+    fn("graft_heavy_hitters", classOf[SpaceSavingTopK])(
+      (a, int) => SpaceSavingTopK(a(0), int(1))),
+    fn("graft_bloom_might_contain", classOf[BloomMightContain])(
+      (a, _) => BloomMightContain(a(0), a(1))),
+    fn("graft_hyperplane_buckets", classOf[HyperplaneBuckets])(
+      (a, int) => HyperplaneBuckets(a(0), int(1), int(2))),
+    fn("graft_theta_sketch", classOf[ThetaSketchAgg])((a, int) => ThetaSketchAgg(a(0), int(1))),
+    fn("graft_theta_estimate", classOf[ThetaEstimate])((a, _) => ThetaEstimate(a(0))),
+    fn("graft_theta_union", classOf[ThetaUnionOp])(
+      (a, int) => ThetaUnionOp(a(0), a(1), int(2))),
+    fn("graft_theta_intersect", classOf[ThetaIntersectOp])(
+      (a, _) => ThetaIntersectOp(a(0), a(1))),
+    fn("graft_theta_anotb", classOf[ThetaAnotBOp])((a, _) => ThetaAnotBOp(a(0), a(1))))
+
+  /** Makes the `graft_*` names callable from SQL on a session built without
+    * [[graft.GraftExtensions]]. Idempotent: a name the session already has
+    * is left as it is. The Column helpers below never need this. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", (args: Seq[Expression]) => DotProduct(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      (args: Seq[Expression]) =>
-        MinHashSig(args(0), intParam(args(1), "graft_minhash_sig")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", (args: Seq[Expression]) => SimHash64(args(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_mins",
-      (args: Seq[Expression]) =>
-        WinnowMins(args(0), intParam(args(1), "graft_winnow_mins")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters",
-      (args: Seq[Expression]) =>
-        SpaceSavingTopK(args(0), intParam(args(1), "graft_heavy_hitters")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      (args: Seq[Expression]) => BloomMightContain(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperplane_buckets",
-      (args: Seq[Expression]) =>
-        HyperplaneBuckets(args(0), intParam(args(1), "graft_hyperplane_buckets"),
-          intParam(args(2), "graft_hyperplane_buckets")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_sketch",
-      (args: Seq[Expression]) =>
-        ThetaSketchAgg(args(0), intParam(args(1), "graft_theta_sketch")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_estimate", (args: Seq[Expression]) => ThetaEstimate(args(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_union",
-      (args: Seq[Expression]) =>
-        ThetaUnionOp(args(0), args(1), intParam(args(2), "graft_theta_union")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_intersect",
-      (args: Seq[Expression]) => ThetaIntersectOp(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_anotb",
-      (args: Seq[Expression]) => ThetaAnotBOp(args(0), args(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      for ((id, info, builder) <- table if !registry.functionExists(id))
+        registry.registerFunction(id, info, builder)
+    }
   }
 
-  /** Requires register(spark) on the session first. */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 
-  /** Requires register(spark) on the session first. */
   def minhashSig(elementHashes: Column, numPerm: Int): Column =
-    call_function("graft_minhash_sig", elementHashes,
-      org.apache.spark.sql.functions.lit(numPerm))
+    column(MinHashSig(expression(elementHashes), numPerm))
 
-  /** Requires register(spark) on the session first. */
-  def simhash64(elementHashes: Column): Column =
-    call_function("graft_simhash64", elementHashes)
+  def simhash64(elementHashes: Column): Column = column(SimHash64(expression(elementHashes)))
 
-  /** Requires register(spark) on the session first. */
   def winnowMins(elementHashes: Column, window: Int): Column =
-    call_function("graft_winnow_mins", elementHashes,
-      org.apache.spark.sql.functions.lit(window))
+    column(WinnowMins(expression(elementHashes), window))
 
-  /** Requires register(spark) on the session first. */
   def heavyHitters(item: Column, capacity: Int): Column =
-    call_function("graft_heavy_hitters", item,
-      org.apache.spark.sql.functions.lit(capacity))
+    column(SpaceSavingTopK(expression(item), capacity).toAggregateExpression())
 
-  /** Requires register(spark) on the session first. */
   def hyperplaneBuckets(vec: Column, numTables: Int, numBits: Int): Column =
-    call_function("graft_hyperplane_buckets", vec,
-      org.apache.spark.sql.functions.lit(numTables),
-      org.apache.spark.sql.functions.lit(numBits))
+    column(HyperplaneBuckets(expression(vec), numTables, numBits))
 
-  /** Requires register(spark) on the session first. `filterBytes` is the
-    * `spark.util.sketch.BloomFilter` wire format (`writeTo`). */
+  /** `filterBytes` is the `spark.util.sketch.BloomFilter` wire format
+    * (`writeTo`). */
   def bloomMightContain(key: Column, filterBytes: Array[Byte]): Column =
-    call_function("graft_bloom_might_contain", key,
-      org.apache.spark.sql.functions.lit(filterBytes))
+    column(BloomMightContain(expression(key), Literal(filterBytes)))
 
-  /** Theta sketch family (distinct-set algebra). Requires register(spark). */
+  /** Theta sketch family (distinct-set algebra). */
   def thetaSketch(item: Column, lgK: Int): Column =
-    call_function("graft_theta_sketch", item, org.apache.spark.sql.functions.lit(lgK))
-  def thetaEstimate(sk: Column): Column = call_function("graft_theta_estimate", sk)
+    column(ThetaSketchAgg(expression(item), lgK).toAggregateExpression())
+  def thetaEstimate(sk: Column): Column = column(ThetaEstimate(expression(sk)))
   def thetaUnion(a: Column, b: Column, lgK: Int): Column =
-    call_function("graft_theta_union", a, b, org.apache.spark.sql.functions.lit(lgK))
+    column(ThetaUnionOp(expression(a), expression(b), lgK))
   def thetaIntersect(a: Column, b: Column): Column =
-    call_function("graft_theta_intersect", a, b)
+    column(ThetaIntersectOp(expression(a), expression(b)))
   def thetaAnotB(a: Column, b: Column): Column =
-    call_function("graft_theta_anotb", a, b)
+    column(ThetaAnotBOp(expression(a), expression(b)))
 }

@@ -422,7 +422,6 @@ object AggOps {
   val aggThetaSetops: Op = Op(
     "agg_theta_setops",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.{GraftFunctions => F}
       val e = Tables.events(s, d).select(to_date(col("ts")).as("day"), col("user_id"))
       // two bounded scalars — the range boundary the scheduler knows anyway

@@ -563,7 +563,6 @@ object JoinOps {
   val joinBloomPrefilter: Op = Op(
     "join_bloom_prefilter",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val c = Tables.customer(s, d).filter(col("c_acctbal") > 9000)
       val bf = c.stat.bloomFilter("c_custkey", 200000, 0.01)
       val bytes = {

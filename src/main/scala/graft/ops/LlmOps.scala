@@ -123,7 +123,6 @@ object LlmOps {
     * codegen + recompute per copy. At 100 TB this is "write the signature
     * table once, then join against it". */
   private def signedBase(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     Housekeeping.cacheBounded("minhash_base",
       withSignature(shingled(docs.select("doc_id", "text")))
         .select(col("doc_id"), col("shingles"), col("sig")))
@@ -151,7 +150,6 @@ object LlmOps {
     * banding as [[nearDupPairs]], so all recall arguments carry over; used
     * by `stream_dedup_minhash`'s foreachBatch index maintenance. */
   def minhashBatchBase(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     withSignature(shingled(docs.select("doc_id", "text")))
       .select(col("doc_id"), col("shingles"), col("sig"))
   }
@@ -239,7 +237,6 @@ object LlmOps {
     * rows against the co-located index. Cost ∝ delta, not corpus — the same
     * contract as the exact incremental op. */
   private def incBases(delta: DataFrame, corpus: DataFrame): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(delta.sparkSession)
     // Two signature bases (cache barriers for the same plan-branch recompute
     // reason as nearDupPairs'): each feeds its band explode AND the shingle
     // side of the verification joins.
@@ -313,7 +310,6 @@ object LlmOps {
     * across dedup runs); [[dedupSimhash]] writes it to parquet and both the
     * banding and the DuckDB oracle read it back. */
   def simhashSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     shingled(docs.select("doc_id", "text"))
       .withColumn("hs", transform(col("shingles"), sh => xxhash64(sh)))
       .withColumn("sig", graft.functions.GraftFunctions.simhash64(col("hs")))
@@ -717,7 +713,6 @@ object LlmOps {
   }
 
   def blockedAllPairs(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     requirePairBudget(s, d)
     import s.implicits._
     val blockPairs = broadcast(
@@ -781,7 +776,6 @@ object LlmOps {
     * the op dedups and ranks it. Deterministic: fixed hyperplanes, fixed
     * corpus. */
   def lshCandidates(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-      graft.functions.GraftFunctions.register(s)
       // SHARED LSH sizing policy with the kNN-graph generator (round 14):
       // width tracks the corpus (occupancy ≈ 8), probe radius and table
       // count widen at scale — the same graft.knn.lsh.{bits,probe,tables}
@@ -986,7 +980,6 @@ object LlmOps {
   }
 
   def ivfCandidates(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-      graft.functions.GraftFunctions.register(s)
       val index = Housekeeping.cacheBounded("ivf_index", ivfTrained(s, d))
       val probes = ivfProbes(s, d, ivfCentroidsOf(s, index))
       // each corpus vector lives in exactly one cell and probe cells are
@@ -1018,7 +1011,6 @@ object LlmOps {
   def ivfIndexPath(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
     Housekeeping.memoGet("ivf_index_store", ivfMemoKey(d)).getOrElse {
       Housekeeping.memoPut("ivf_index_store", ivfMemoKey(d), dir => {
-        graft.functions.GraftFunctions.register(s)
         val trained = Housekeeping.cacheBounded("ivf_index", ivfTrained(s, d))
         // partitionBy(cell): K directories — at 100 TB each holds that cell's
         // shard of the corpus, and a probe reads ONLY its probed cells' files
@@ -1037,7 +1029,6 @@ object LlmOps {
     * properties on the executed plan. */
   def ivfProbe(s: org.apache.spark.sql.SparkSession, d: String,
                idx: java.nio.file.Path): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = s.read.parquet(idx.resolve("centroids").toString)
     val probes = ivfProbes(s, d, cents)
     val probedCells = probes.select("cell").distinct().collect().map(_.getInt(0))
@@ -1083,7 +1074,6 @@ object LlmOps {
   def ivfAppendIndexPath(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
     Housekeeping.memoGet("ivf_append_store", ivfAppendMemoKey(d)).getOrElse {
       Housekeeping.memoPut("ivf_append_store", ivfAppendMemoKey(d), dir => {
-        graft.functions.GraftFunctions.register(s)
         val corpus = withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc")
         val cellsDir = dir.resolve("cells")
         // BUILD (once): train on the base corpus, freeze the centroids, and
@@ -1116,7 +1106,6 @@ object LlmOps {
     * the same broadcast-probes equi-join as every IVF probe. */
   def ivfManifestProbe(s: org.apache.spark.sql.SparkSession, d: String,
                        idx: java.nio.file.Path, version: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     cellFileProbe(s, d, s.read.parquet(idx.resolve("centroids").toString),
       TableManifest.filesAsOf(idx.resolve("cells"), version))
   }
@@ -1152,7 +1141,6 @@ object LlmOps {
     * must equal probe(v2) row-exactly. */
   def ivfAppendRebuildCandidates(s: org.apache.spark.sql.SparkSession, d: String,
                                  idx: java.nio.file.Path): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = s.read.parquet(idx.resolve("centroids").toString)
     val full = assignToCells(withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc"), cents)
     val probes = ivfProbes(s, d, cents)
@@ -1167,7 +1155,6 @@ object LlmOps {
     * ingest both call exactly this, which is what makes their indexes
     * byte-equal in content. */
   def ivfAssignAgainst(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     assignToCells(withVec(vectors, "neighbor_id", "vc", "nc"), centroids)
   }
 
@@ -1330,7 +1317,6 @@ object LlmOps {
     "stream_ann_ivf_autorefresh",
     (s, d) => {
       import org.apache.spark.sql.streaming.Trigger
-      graft.functions.GraftFunctions.register(s)
       val batchIdx = ivfAppendIndexPath(s, d) // frozen base centroids
       val floor = s.conf.getOption("graft.ivf.refresh.ppm")
         .map(_.toLong).getOrElse(100000L)
@@ -1460,7 +1446,6 @@ object LlmOps {
   def ivfRetrainIndexPath(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
     Housekeeping.memoGet("ivf_retrain_store", ivfRetrainMemoKey(d)).getOrElse {
       Housekeeping.memoPut("ivf_retrain_store", ivfRetrainMemoKey(d), dir => {
-        graft.functions.GraftFunctions.register(s)
         val corpus = Housekeeping.cacheBounded("ivf_retrain_corpus",
           withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc"))
         // one generation = one centroid table + the full corpus's inverted
@@ -1484,7 +1469,6 @@ object LlmOps {
     * the reader's quantizer and inverted file can never mix generations. */
   def ivfSwapProbe(s: org.apache.spark.sql.SparkSession, d: String,
                    idx: java.nio.file.Path, version: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (centFiles, cellFiles) = TableManifest.filesAsOf(idx, version)
       .partition(_.toString.contains("/centroids/"))
     cellFileProbe(s, d, s.read.parquet(centFiles.map(_.toString): _*), cellFiles)
@@ -1493,7 +1477,6 @@ object LlmOps {
   /** The from-scratch rebuild the swap replaces, probed in memory — must
     * equal probe(v2) row-exactly (IvfRetrainSpec). */
   def ivfRetrainRebuildCandidates(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc")
     val cents = ivfCentroidsOf(s, ivfTrain(s, corpus))
     broadcast(ivfProbes(s, d, cents)).join(assignToCells(corpus, cents), Seq("cell"))
@@ -1740,7 +1723,6 @@ object LlmOps {
     * sim) for [[stageAndRank]]. Exposed for AnnPqSpec's recall/work
     * assertions. */
   def pqCandidates(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = Housekeeping.cacheBounded("pq_corpus",
       withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc"))
     val subrows = Housekeeping.cacheBounded("pq_subrows",
@@ -1832,7 +1814,6 @@ object LlmOps {
   val simSearchHybridRrf: Op = Op(
     "sim_search_hybrid_rrf",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val qText = docs.where(col("doc_id") < 10)
         .select(col("doc_id").as("query_id"), col("text"))
@@ -1946,7 +1927,6 @@ object LlmOps {
   val simSearchKnnPerQuery: Op = Op(
     "sim_search_knn_per_query",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val q = withVec(Tables.embeddings(s, d), "query_id", "vq", "nq").where(col("query_id") < 10)
       val c = withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc")
       val w = Window.partitionBy("query_id")
@@ -1987,7 +1967,6 @@ object LlmOps {
   val simSearchMmrRerank: Op = Op(
     "sim_search_mmr_rerank",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val q = withVec(Tables.embeddings(s, d), "query_id", "vq", "nq").where(col("query_id") < 10)
       val c = withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc")
       val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
@@ -2162,7 +2141,6 @@ object LlmOps {
   }
 
   def knnGraphCandidates(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // one cheap count() pass feeds the sizing policy
     val (nTables, nBits, radius) = lshParams(s, Tables.embeddings(s, d).count())
     def buckets(vec: String): Column =
@@ -2272,7 +2250,6 @@ object LlmOps {
   val simSearchFiltered: Op = Op(
     "sim_search_filtered",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       def side(idAs: String, vecAs: String, labAs: String, normAs: String) =
         Tables.embeddings(s, d)
           .select(col("vec_id").as(idAs),

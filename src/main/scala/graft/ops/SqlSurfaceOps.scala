@@ -25,7 +25,9 @@ object SqlSurfaceOps {
     "sql_udf_scalar_inline",
     (s, d) => {
       GraftCatalog.registerAll(s, d)
-      s.sql("CREATE OR REPLACE TEMPORARY FUNCTION graft_net_revenue(" +
+      // drop, then create: OR REPLACE logs a "replaced" warning on every call
+      s.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_net_revenue")
+      s.sql("CREATE TEMPORARY FUNCTION graft_net_revenue(" +
         "p DOUBLE, disc DOUBLE, tax DOUBLE) RETURNS DECIMAL(24,6) RETURN " +
         "CAST(p AS DECIMAL(12,2)) * (1 - CAST(disc AS DECIMAL(3,2))) * " +
         "(1 + CAST(tax AS DECIMAL(3,2)))")
@@ -49,7 +51,8 @@ object SqlSurfaceOps {
     "sql_table_function",
     (s, d) => {
       GraftCatalog.registerAll(s, d)
-      s.sql("CREATE OR REPLACE TEMPORARY FUNCTION graft_seg_customers(seg STRING) " +
+      s.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_seg_customers")
+      s.sql("CREATE TEMPORARY FUNCTION graft_seg_customers(seg STRING) " +
         "RETURNS TABLE (c_custkey BIGINT, c_acctbal DOUBLE) RETURN " +
         "SELECT c_custkey, c_acctbal FROM customer WHERE c_mktsegment = seg")
       s.sql("SELECT 'AUTOMOBILE' AS seg, COUNT(*) AS n_customers, " +

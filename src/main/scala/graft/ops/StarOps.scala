@@ -144,7 +144,9 @@ object StarOps {
 }
 
 /** Temp-view registration for the SQL surface: a user of the reference who
-  * writes SQL points their queries at these view names. */
+  * writes SQL points their queries at these view names. The `graft_*` SQL
+  * functions come from [[graft.GraftExtensions]] or
+  * `graft.functions.GraftFunctions.register`, not from here. */
 object GraftCatalog {
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "documents", "embeddings")
@@ -164,7 +166,6 @@ object GraftCatalog {
         spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
       }
       Tables.events(spark, dir).createOrReplaceTempView("events")
-      graft.functions.GraftFunctions.register(spark)
       current.put(spark, dir)
     }
   }

@@ -103,7 +103,6 @@ object TextOps {
   val textFingerprint: Op = Op(
     "text_fingerprint",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val words = split(col("text"), " ")
       // The hash-array base now has TWO consumers (the staged positional
       // table and the fp explode), so it MUST be materialized: an uncached
@@ -248,7 +247,6 @@ object TextOps {
   val textHeavyHitters: Op = Op(
     "text_heavy_hitters",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       def toks = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("tok"))

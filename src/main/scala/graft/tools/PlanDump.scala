@@ -1,14 +1,25 @@
 package graft.tools
 
 import graft.SparkEntry
+import graft.ops.Housekeeping
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import java.nio.file.{Files, Paths}
 
-/** Dumps `explain("formatted")` for representative queries into PLANS.md —
-  * the plan-review artifact backing SCALE.md's shuffle/pushdown claims.
-  * Usage: runMain graft.tools.PlanDump <sfDir> [out.md]
+/** Dumps `explain("formatted")` for query keys, after one run of each so
+  * AQE has finalized the plan.
+  *
+  * {{{
+  *   runMain graft.tools.PlanDump <sfDir> [out.md]
+  *   runMain graft.tools.PlanDump <sfDir> <outDir> <key1,key2,...> [suffix]
+  * }}}
+  *
+  * The first form writes the representative `picks` below into PLANS.md —
+  * the plan-review artifact backing SCALE.md's shuffle/pushdown claims. The
+  * second writes `<outDir>/<key>_<suffix>.txt` per listed key (suffix
+  * defaults to `after`): run it once on the tree before a change (suffix
+  * `before`) and once after to commit a plan diff, as under plans/.
   */
 object PlanDump {
   private val picks = Seq(
@@ -52,7 +63,9 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
+    val perKey = args.length > 2
+    val out = Paths.get(args.lift(1).getOrElse("PLANS.md"))
+    val keys = if (perKey) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq else picks
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -61,19 +74,30 @@ object PlanDump {
       .config("spark.sql.maxMetadataStringLength", "200")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — `explain(\"formatted\")` for representative queries\n\n")
-    sb.append(s"Generated by `graft.tools.PlanDump` against `$sfDir`.\n")
-    sb.append("Commentary on why each plan is the one we want: SCALE.md.\n")
-    for (name <- picks) {
+    val plans = keys.map { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // let AQE finalize
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim)
-      sb.append("\n```\n")
+      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim
+      Housekeeping.releaseAll()
+      name -> plan
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out")
+    if (perKey) {
+      Files.createDirectories(out)
+      for ((name, plan) <- plans) {
+        val file = out.resolve(s"${name}_${args.lift(3).getOrElse("after")}.txt")
+        Files.writeString(file, plan + "\n")
+        println(s"wrote $file")
+      }
+    } else {
+      val sb = new StringBuilder
+      sb.append("# PLANS — `explain(\"formatted\")` for representative queries\n\n")
+      sb.append(s"Generated by `graft.tools.PlanDump` against `$sfDir`.\n")
+      sb.append("Commentary on why each plan is the one we want: SCALE.md.\n")
+      for ((name, plan) <- plans)
+        sb.append(s"\n## $name\n\n```\n$plan\n```\n")
+      Files.writeString(out, sb.toString)
+      println(s"wrote $out")
+    }
     spark.stop()
   }
 }
