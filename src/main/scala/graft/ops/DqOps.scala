@@ -188,7 +188,7 @@ object DqOps {
       val out = Housekeeping.tempDirBounded("dq_obs",
         java.nio.file.Files.createTempDirectory("dq_obs")).toString
       gated.write.mode("overwrite").parquet(out)
-      val m = obs.get
+      val m = Housekeeping.observed(obs, "dq_observe_metrics")
       import s.implicits._
       Seq("a_n_rows", "b_price_cents", "c_max_orderkey", "d_n_high_discount")
         .map(k => (k, m(k).asInstanceOf[Number].longValue()))

@@ -254,7 +254,7 @@ object GraphOps {
         val obs = org.apache.spark.sql.Observation()
         val out = Housekeeping.iterationBarrier(
           df.observe(obs, count(lit(1)).as("n")))
-        frontierRows = obs.get("n").asInstanceOf[Long]
+        frontierRows = Housekeeping.observed(obs, "graph_bfs_levels")("n").asInstanceOf[Long]
         out
       }
       var labels = barrierCounted(nodes.where(col("v") % 97 === 0)
@@ -349,8 +349,8 @@ object GraphOps {
       val obs = org.apache.spark.sql.Observation()
       val out = Housekeeping.iterationBarrier(
         df.observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("s")))
-      val ns = Option(obs.get("s").asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO)
+      val ns = Option(Housekeeping.observed(obs, "ccLabelsRounds")("s")
+        .asInstanceOf[java.math.BigDecimal]).getOrElse(java.math.BigDecimal.ZERO)
       converged = cur != null && ns.compareTo(cur) == 0
       cur = ns
       out
@@ -497,8 +497,9 @@ object GraphOps {
       val obs = org.apache.spark.sql.Observation()
       val out = Housekeeping.iterationBarrier(df.observe(obs,
         count(lit(1)).as("n"), sum(col("dist").cast("decimal(38,0)")).as("s")))
-      val ns = (obs.get("n").asInstanceOf[Long],
-        Option(obs.get("s").asInstanceOf[java.math.BigDecimal])
+      val m = Housekeeping.observed(obs, "spDistancesRounds")
+      val ns = (m("n").asInstanceOf[Long],
+        Option(m("s").asInstanceOf[java.math.BigDecimal])
           .getOrElse(java.math.BigDecimal.ZERO))
       converged = cur != null && ns._1 == cur._1 && ns._2.compareTo(cur._2) == 0
       cur = ns

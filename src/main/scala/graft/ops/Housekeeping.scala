@@ -1,12 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 import java.nio.file.{Files, Path}
 import java.util.Comparator
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, TimeoutException}
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.util.control.NonFatal
 
 /** Bounded lifecycles for the side artifacts some operators create (caches,
@@ -115,6 +117,25 @@ object Housekeeping {
         }
         df.checkpoint(true)
     }
+  }
+
+  /** How long [[observed]] waits for an observation's metrics. They arrive
+    * through the listener bus after the observed action finishes, normally
+    * within milliseconds; the bound only turns a lost or never-run
+    * observation into an error instead of a hang. */
+  val ObserveTimeout: FiniteDuration = 2.minutes
+
+  /** The metrics of `obs` once the action that ran its dataset has
+    * finished — `Observation.get` with a bound. Throws, naming `op`, when
+    * they do not arrive within `within` (e.g. the observed dataset never
+    * ran, or an optimizer rewrite dropped the observe node). */
+  def observed(obs: Observation, op: String,
+      within: FiniteDuration = ObserveTimeout): Map[String, Any] = {
+    val row = try Await.result(obs.future, within) catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"$op: observed metrics did not arrive within $within (did the observed dataset run?)")
+    }
+    row.getValuesMap[Any](row.schema.fieldNames.toSeq)
   }
 
   /** cache() with one live generation per key. */

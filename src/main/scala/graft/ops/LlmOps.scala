@@ -1668,6 +1668,20 @@ object LlmOps {
   private val PqIters = 2
   private val PqShortlist = 48
 
+  /** A neighbor's approximate dot product from its code word `cells` (an
+    * M-array in sub order) and the query's dense `lut`:
+    * adot = 0.0 + Σ_sub lut[sub·PqK + cells[sub]] — the identical
+    * left-to-right IEEE fold the collect_list/array_sort/aggregate
+    * spelling produced, so every adot (hence the shortlist) is bit-equal.
+    * A code word short of a sub fails the query: its missing term would
+    * otherwise null the neighbor's adot and silently drop it from the
+    * shortlist. */
+  private[graft] val pqApproxDot: Column = when(size(col("cells")) === PqM,
+    (0 until PqM).foldLeft(lit(0.0)) { (acc, sub) =>
+      acc + element_at(col("lut"),
+        (lit(sub * PqK) + element_at(col("cells"), sub + 1) + lit(1)).cast("int"))
+    }).otherwise(raise_error(lit(s"sim_search_ann_pq: a PQ code word lacks one of its $PqM subs")))
+
   /** (id, sub, sv) subvector rows; dsub derives from the vector length so
     * the split never hardcodes the embedding dim. */
   private def pqSubrows(vec: DataFrame, idCol: String): DataFrame = {
@@ -1757,17 +1771,10 @@ object LlmOps {
     val codeWords = codes.groupBy("neighbor_id")
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cell")))),
         x => x.getField("cell")).as("cells"))
-    // adot = 0.0 + Σ_sub lut[sub·PqK + cells[sub]] — the identical
-    // left-to-right IEEE fold the collect_list/array_sort/aggregate
-    // spelling produced, so every adot (hence the shortlist) is bit-equal.
-    val adot = (0 until PqM).foldLeft(lit(0.0)) { (acc, sub) =>
-      acc + element_at(col("lut"),
-        (lit(sub * PqK) + element_at(col("cells"), sub + 1) + lit(1)).cast("int"))
-    }
     val wShort = Window.partitionBy("query_id")
       .orderBy(col("asim").desc, col("neighbor_id").asc)
     val shortlist = codeWords.crossJoin(broadcast(lutDense))
-      .select(col("query_id"), col("neighbor_id"), adot.as("adot"))
+      .select(col("query_id"), col("neighbor_id"), pqApproxDot.as("adot"))
       .join(corpus.select("neighbor_id", "nc"), "neighbor_id")
       .join(broadcast(queries.select("query_id", "nq")), "query_id")
       .where(col("neighbor_id") =!= col("query_id"))

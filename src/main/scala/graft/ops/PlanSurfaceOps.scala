@@ -26,7 +26,7 @@ object PlanSurfaceOps {
     * exact and type-stable (the INT96 timestamp columns would veto pushdown
     * for the whole query). */
   private[graft] def aggScan(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/lineitem.parquet")
+    Tables.lineitem(s, d)
       .agg(count(lit(1)).as("n_rows"),
         min(col("l_orderkey")).as("min_orderkey"),
         max(col("l_orderkey")).as("max_orderkey"),

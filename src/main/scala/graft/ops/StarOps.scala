@@ -148,9 +148,6 @@ object StarOps {
   * functions come from [[graft.GraftExtensions]] or
   * `graft.functions.GraftFunctions.register`, not from here. */
 object GraftCatalog {
-  private val tables = Seq("region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "documents", "embeddings")
-
   // Registration is skipped only when the session's views already point at
   // THIS dir (a set-based memo would serve stale views after alternating
   // warehouse roots in one session — the views are session-global). The memo
@@ -162,10 +159,8 @@ object GraftCatalog {
 
   def registerAll(spark: SparkSession, dir: String): Unit = current.synchronized {
     if (current.get(spark) != dir) {
-      tables.foreach { t =>
-        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-      }
-      Tables.events(spark, dir).createOrReplaceTempView("events")
+      // through the schema-pinned loaders: registering starts no Spark job
+      Tables.schemas.keys.foreach(t => Tables.load(spark, dir, t).createOrReplaceTempView(t))
       current.put(spark, dir)
     }
   }

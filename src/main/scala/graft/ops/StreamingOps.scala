@@ -561,8 +561,7 @@ object StreamingOps {
       val ckpt = tmp("st_restart_ckpt")
       // split point computed on epoch-micros longs (exact integer midpoint;
       // the NTZ→LTZ cast is value-identical under the pinned UTC session)
-      val raw = s.read.schema(graft.tables.Tables.rawEventsSchema)
-        .parquet(s"$d/events.parquet")
+      val raw = graft.tables.Tables.rawEvents(s, d)
         .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
       val bounds = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
       val cut = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
@@ -626,8 +625,7 @@ object StreamingOps {
         Housekeeping.scratchDir("st_upsert_out")).toString
       val srcDir = Housekeeping.scratchDir("st_upsert_src")
       val ckpt = tmp("st_upsert_ckpt")
-      val raw = s.read.schema(graft.tables.Tables.rawEventsSchema)
-        .parquet(s"$d/events.parquet")
+      val raw = graft.tables.Tables.rawEvents(s, d)
         .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
       val bounds = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
       val cut = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
@@ -688,9 +686,7 @@ object StreamingOps {
     (s, d) => {
       val qn = s"st_backfill_${System.nanoTime()}"
       Housekeeping.tempViewBounded("st_backfill", s, qn)
-      val raw = s.read.schema(graft.tables.Tables.rawEventsSchema)
-        .parquet(s"$d/events.parquet")
-        .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
+      val raw = graft.tables.Tables.events(s, d)
       // deterministic day-boundary split: midpoint of the event-time span,
       // floored to a UTC day (two bounded scalars)
       val bounds = raw.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).first()
@@ -776,8 +772,7 @@ object StreamingOps {
         Housekeeping.scratchDir("st_manifest")).toString)
       val srcDir = Housekeeping.scratchDir("st_manifest_src")
       val ckpt = tmp("st_manifest_ckpt")
-      val raw = s.read.schema(graft.tables.Tables.rawEventsSchema)
-        .parquet(s"$d/events.parquet")
+      val raw = graft.tables.Tables.rawEvents(s, d)
         .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
       val bounds = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
       val cut = bounds.getLong(0) / 2 + bounds.getLong(1) / 2

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.tables.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -45,7 +46,7 @@ object ScaleUp {
 
     val copies = spark.range(k).select(col("id").as("copy"))
 
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
+    val li = Tables.lineitem(spark, src)
     val liCols = li.columns.toSeq
     val maxOrd = li.agg(max("l_orderkey")).first().getLong(0) + 1
     val maxPart = li.agg(max("l_partkey")).first().getLong(0) + 1
@@ -57,7 +58,7 @@ object ScaleUp {
       .write.mode("overwrite").parquet(s"$dst/lineitem.parquet")
     println(s"lineitem x$k written")
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.documents(spark, src)
     val docCols = docs.columns.toSeq
     val maxDoc = docs.agg(max("doc_id")).first().getLong(0) + 1
     docs.crossJoin(copies)

@@ -353,4 +353,15 @@ class CorpusOpsSpec extends AnyFunSuite {
     info(f"mean recall@5 = $mean%.2f")
     assert(mean >= 0.3, f"mean recall $mean%.2f below floor")
   }
+
+  test("ann_pq: a code word lacking a sub fails the query instead of sinking the neighbor") {
+    import spark.implicits._
+    val lut = (0 until 4 * 16).map(_.toDouble)
+    val whole = Seq((Seq(1, 2, 3, 4), lut)).toDF("cells", "lut")
+    // 0.0 + lut(1) + lut(16 + 2) + lut(32 + 3) + lut(48 + 4)
+    assert(whole.select(LlmOps.pqApproxDot).first().getDouble(0) == 1.0 + 18 + 35 + 52)
+    val short = Seq((Seq(1, 2, 3, 4), lut), (Seq(1, 2, 3), lut)).toDF("cells", "lut")
+    val e = intercept[Exception](short.select(LlmOps.pqApproxDot).collect())
+    assert(e.getMessage.contains("lacks one of its 4 subs"), e.getMessage)
+  }
 }

@@ -1,9 +1,12 @@
 package graft
 
-import graft.ops.{LlmOps, SourceSinkOps, StreamingOps}
+import graft.ops.{Housekeeping, LlmOps, SourceSinkOps, StreamingOps}
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** Soak: repeated invocations of the artifact-creating ops must hold a
@@ -117,5 +120,20 @@ class HousekeepingSpec extends AnyFunSuite {
     }
     assert(tmpCount("graft_jsonl") <= jsonlAfterFirst, "jsonl dirs must not accumulate")
     assert(tmpCount("graft_orc") <= orcAfterFirst, "orc dirs must not accumulate")
+  }
+
+  test("observed metrics: returned once the action ran; an unrun observation fails in bound") {
+    val ran = Observation()
+    spark.range(10).observe(ran, count(lit(1)).as("n")).write.format("noop").mode("overwrite").save()
+    assert(Housekeeping.observed(ran, "ran_op")("n") == 10L)
+    // never executed: the plain Observation.get would wait forever
+    val unrun = Observation()
+    spark.range(10).observe(unrun, count(lit(1)).as("n"))
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](
+      Housekeeping.observed(unrun, "unrun_op", 500.millis))
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("unrun_op"))
+    assert(waited >= 0.5 && waited < 10, s"waited $waited s for a 0.5 s bound")
   }
 }

@@ -46,8 +46,7 @@ class StreamRestartSpec extends AnyFunSuite {
       val srcDir = root.resolve("src"); Files.createDirectories(srcDir)
       val out = root.resolve("out").toString
       val ckpt = root.resolve("ckpt").toString
-      val raw = spark.read.schema(graft.tables.Tables.rawEventsSchema)
-        .parquet(s"${TestSpark.sf0001}/events.parquet")
+      val raw = graft.tables.Tables.rawEvents(spark, TestSpark.sf0001)
         .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
       val bounds = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
       val cut = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
@@ -138,8 +137,7 @@ class StreamRestartSpec extends AnyFunSuite {
     val src = Files.createTempDirectory("st_mrestart_src")
     val ckpt = Files.createTempDirectory("st_mrestart_ckpt").toString
     try {
-      val raw = spark.read.schema(Tables.rawEventsSchema)
-        .parquet(TestSpark.sf0001 + "/events.parquet")
+      val raw = Tables.rawEvents(spark, TestSpark.sf0001)
         .withColumn("ts_us", unix_micros(Tables.ntzColToTimestamp("ts")))
       val b = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
       val cut = b.getLong(0) / 2 + b.getLong(1) / 2
