@@ -810,14 +810,12 @@ object DqOps {
 
   /** The committed standing report — the read side every consumer
     * (`join_skew_hybrid` routing, operators sizing their AQE thresholds)
-    * uses: measurement runs ONLY when no version was ever committed (or
-    * when `graft.skew.remeasure=true` forces a fresh epoch — the conf'd
-    * escape hatch), so consuming queries pay file-list metadata work, not
-    * the two per-key aggregates. */
+    * uses: measurement runs ONLY when no version was ever committed
+    * (`dq_join_skew_report` is the re-measure path), so consuming queries
+    * pay file-list metadata work, not the two per-key aggregates. */
   def joinSkewReport(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val root = java.nio.file.Paths.get(joinSkewReportStagePath(d))
-    val force = s.conf.getOption("graft.skew.remeasure").contains("true")
-    if (force || !java.nio.file.Files.exists(root.resolve(TableManifest.fileName)))
+    if (!java.nio.file.Files.exists(root.resolve(TableManifest.fileName)))
       restageJoinSkewReport(s, d)
     TableManifest.readTable(s, root)
   }

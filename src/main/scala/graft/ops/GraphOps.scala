@@ -124,8 +124,8 @@ object GraphOps {
         nodes.join(e.select(col("dst").as("v")).distinct(), Seq("v"), "left_anti")
           .select(col("v"), lit(teleport).as("r")))
       var ranks = nodes.withColumn("r", lit(Scale / n))
-      // Checkpoint cadence knob (round 18, guide §5 — fewer driver-side
-      // materialization jobs): barrier every k-th round + after the last.
+      // Checkpoint cadence (round 18, guide §5 — fewer driver-side
+      // materialization jobs): barrier every 2nd round + after the last.
       // With the per-round join gone (round 17's union rewrite) the round
       // body is ONE equi-join + partial agg + union, so a lineage depth of
       // two rounds plans fine; interleaved same-window A/B at sf0.1/cpus=32
@@ -133,12 +133,11 @@ object GraphOps {
       // 4.82 vs cadence 1 min 4.81 / median 4.99 — 3 checkpoint jobs instead
       // of 5 wins ~5% and the default is 2. (Contrast
       // graph_label_propagation, whose heavier round body measured SLOWER at
-      // cadence 2 in round 17 — cadence is per-kernel, hence the knob.)
+      // cadence 2 in round 17 — cadence is per-kernel.)
       // Value-identical at any cadence: the barrier only truncates lineage.
-      val ckptEvery = math.max(1, s.conf.get("graft.graph.prCkptEvery", "2").toInt)
       for (i <- 1 to Iters) {
         ranks = pagerankStep(e, silent, ranks, teleport)
-        if (i % ckptEvery == 0 || i == Iters)
+        if (i % 2 == 0 || i == Iters)
           ranks = Housekeeping.iterationBarrier(ranks)
       }
       ranks.select(col("v").as("part_id"), col("r").as("rank_scaled"))
@@ -293,8 +292,6 @@ object GraphOps {
     * real data, so the fixed-round oracle below compares CONVERGED labels. */
   private[graft] val CcRounds = 8
 
-  private def ccMemoKey(d: String) = s"cc_labels_v1|$CcRounds|$d"
-
   /** Labels after `rounds` combined hash-min + pointer-jump rounds — the
     * shared kernel of the op and its convergence spec. All-integer (labels
     * are node ids), so every round is bit-deterministic on both engines.
@@ -411,20 +408,10 @@ object GraphOps {
     * per-component census, |components| rows. */
   val graphConnectedComponents: Op = Op(
     "graph_connected_components",
-    (s, d) => {
-      // Producer side of the shared label stage (the ngram_pairs memo
-      // pattern): the census always recomputes and persists the label
-      // table; graph_modularity_score reads it back instead of re-running
-      // the 8-round kernel. All-integer labels round-trip parquet exactly,
-      // so memo-hit and memo-miss paths hash identically.
-      val path = Housekeeping.memoPut("cc_labels", ccMemoKey(d),
-        dir => ccLabels(s, d, CcRounds).write.mode("overwrite")
-          .parquet(dir.resolve("labels").toString))
-      s.read.parquet(path.resolve("labels").toString)
-        .groupBy(col("lbl").as("component"))
-        .agg(count(lit(1)).as("n_nodes"), max(col("v")).as("max_node"))
-        .orderBy("component")
-    },
+    (s, d) => ccLabels(s, d, CcRounds)
+      .groupBy(col("lbl").as("component"))
+      .agg(count(lit(1)).as("n_nodes"), max(col("v")).as("max_node"))
+      .orderBy("component"),
     Some {
       // Every h_i / l_i is referenced twice downstream; DuckDB INLINES plain
       // CTEs, so without MATERIALIZED the base scan fan-out is 4^rounds
@@ -685,10 +672,7 @@ object GraphOps {
           greatest(col("src"), col("dst")).as("b")).distinct())
       val und = fe.union(fe.select(col("dst").as("src"), col("src").as("dst"))).distinct()
       val deg = und.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-      // consumer side of the shared label stage — see graphConnectedComponents
-      val labels = Housekeeping.memoGet("cc_labels", ccMemoKey(d))
-        .map(p => s.read.parquet(p.resolve("labels").toString))
-        .getOrElse(ccLabels(s, d, CcRounds))
+      val labels = ccLabels(s, d, CcRounds)
       val mRow = ue.agg(count(lit(1)).as("m"))
       val ec = ue.join(labels.withColumnRenamed("v", "a"), "a")
         .groupBy(col("lbl").as("component")).agg(count(lit(1)).as("e_c"))

@@ -186,7 +186,7 @@ object Housekeeping {
   }
 
   /** Recursive file-tree copy — driver-side bytes, no Spark job. Used to
-    * clone a MEMOIZED staged artifact into a run-local mutable table root:
+    * clone a build-once [[indexStore]] into a run-local mutable table root:
     * re-deriving identical bytes with a Spark job per invocation would pay
     * a full compute pass for content the staged store already holds. */
   def copyTree(src: Path, dst: Path): Unit = {
@@ -257,39 +257,25 @@ object Housekeeping {
     views.clear()
   }
 
-  private val memos = new ConcurrentHashMap[String, (String, Path)]()
+  private val stores = scala.collection.mutable.Map[String, Path]()
 
-  /** Cross-query materialization memo — deliberately NOT cleared by
-    * [[releaseAll]]: this is the "materialize a shared stage once, every
-    * consumer reads the table" pattern a production pipeline uses for a
-    * stage two queries share (here: the ngram near-dup pair table feeding
-    * both dedup_ngram_jaccard and dedup_cluster_keep). The PRODUCER query
-    * always recomputes and pays the materialization inside its own timed
-    * span (so its benchmark number stays honest); consumers read the
-    * parquet if the content key — the inputs that determine the stage's
-    * value — still matches. One live generation per key; a new content key
-    * replaces (and deletes) the previous generation. */
-  def memoPut(key: String, contentKey: String, write: Path => Unit): Path = {
-    val dir = Files.createTempDirectory(s"memo_$key")
-    write(dir)
-    val prev = memos.put(key, (contentKey, dir))
-    if (prev != null && prev._2 != dir) {
-      // Deletion is deferred by ONE generation: a consumer DataFrame that
-      // lazily resolved the previous path (e.g. graph_modularity_score built
-      // from memoGet before the census re-ran) stays readable across one
-      // producer re-run; disk stays bounded at two generations per key.
-      val grave = graveyard.put(key, prev._2)
-      if (grave != null && grave != prev._2) deleteRecursively(grave)
+  /** The directory of the persisted index store for `contentKey` — the key
+    * names the index and the inputs that determine its value (e.g.
+    * `ivf_index_v1|<corpus dir>`). The first call builds it by running
+    * `build` on a fresh directory; later calls return that directory while
+    * it exists, and rebuild it if it was removed. Deliberately NOT cleared
+    * by [[releaseAll]]: an index is built once and probed many times, and
+    * every probing key reads the same store. A store is never replaced or
+    * deleted within the process, so a lazily resolved reader never loses
+    * its files; disk holds one directory per (index, corpus). */
+  def indexStore(contentKey: String)(build: Path => Unit): Path = synchronized {
+    stores.get(contentKey).filter(Files.exists(_)).getOrElse {
+      val dir = Files.createTempDirectory("index_store")
+      build(dir)
+      stores(contentKey) = dir
+      dir
     }
-    dir
   }
-
-  private val graveyard = new ConcurrentHashMap[String, Path]()
-
-  def memoGet(key: String, contentKey: String): Option[Path] =
-    Option(memos.get(key)).collect {
-      case (ck, p) if ck == contentKey && Files.exists(p) => p
-    }
 
   private val views = new ConcurrentHashMap[String, (SparkSession, String)]()
 

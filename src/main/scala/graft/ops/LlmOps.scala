@@ -508,24 +508,9 @@ object LlmOps {
       "FROM p JOIN sz na ON na.doc_id = doc_a JOIN sz nb ON nb.doc_id = doc_b " +
       "WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.5)"
 
-  /** The pair stage is SHARED with dedup_cluster_keep through a
-    * materialization memo ([[Housekeeping.memoPut]]): the jaccard query is
-    * the producer — it always recomputes and writes the pair table (the
-    * materialization cost stays inside its own measurement), cluster_keep
-    * reads it back instead of re-running the shingle self-join. Exactly the
-    * production shape: one near-dup pair table on disk, several consumers.
-    * Values survive the parquet round-trip bit-identically (exact IEEE
-    * doubles), so both the memo-hit and memo-miss paths hash identically. */
-  private def ngramMemoKey(d: String) = s"ngram_pairs_v1|$d"
-
   val dedupNgramJaccard: Op = Op(
     "dedup_ngram_jaccard",
-    (s, d) => {
-      val path = Housekeeping.memoPut("ngram_pairs", ngramMemoKey(d),
-        dir => ngramPairs(Tables.documents(s, d)).write.mode("overwrite")
-          .parquet(dir.resolve("pairs").toString))
-      s.read.parquet(path.resolve("pairs").toString).orderBy("doc_a", "doc_b")
-    },
+    (s, d) => ngramPairs(Tables.documents(s, d)).orderBy("doc_a", "doc_b"),
     Some(s"WITH $ngramPairCtes SELECT doc_a, doc_b, jaccard FROM j ORDER BY doc_a, doc_b"))
 
   /** The end of the near-dup pipeline: the KEEP decision. Near-dup pairs form
@@ -594,12 +579,7 @@ object LlmOps {
 
   val dedupClusterKeep: Op = Op(
     "dedup_cluster_keep",
-    (s, d) => ccKeep(
-      // consumer side of the shared pair stage (see dedupNgramJaccard): read
-      // the materialized pair table when its inputs match, else compute
-      Housekeeping.memoGet("ngram_pairs", ngramMemoKey(d))
-        .map(p => s.read.parquet(p.resolve("pairs").toString))
-        .getOrElse(ngramPairs(Tables.documents(s, d)))),
+    (s, d) => ccKeep(ngramPairs(Tables.documents(s, d))),
     Some(s"WITH RECURSIVE $ngramPairCtes, " +
       "e AS (SELECT doc_a AS src, doc_b AS dst FROM j UNION ALL SELECT doc_b, doc_a FROM j), " +
       "cc(node, label) AS (SELECT DISTINCT src, src FROM e " +
@@ -1000,25 +980,21 @@ object LlmOps {
     * BUILD ONCE — train the quantizer, write the inverted file as a
     * cell-PARTITIONED parquet layout (`cells/cell=<c>/…`) plus the K-row
     * centroid table — then PROBE MANY times against the files. Keyed by the
-    * corpus dir through the same content-key memo as the ngram pair table
-    * ([[Housekeeping.memoPut]]): the first caller pays the build inside its
-    * own measurement, every later caller (and every later bench pass) reads
-    * the index from disk. Training is bit-deterministic (see [[ivfTrained]]),
-    * so build-then-probe and the per-run trainer return identical rankings —
-    * AnnIvfSpec asserts exact equality. */
-  private def ivfMemoKey(d: String) = s"ivf_index_v1|$d"
-
+    * corpus dir through [[Housekeeping.indexStore]]: the first caller pays
+    * the build inside its own measurement, every later caller (and every
+    * later bench pass) reads the index from disk. Training is
+    * bit-deterministic (see [[ivfTrained]]), so build-then-probe and the
+    * per-run trainer return identical rankings — AnnIvfSpec asserts exact
+    * equality. */
   def ivfIndexPath(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
-    Housekeeping.memoGet("ivf_index_store", ivfMemoKey(d)).getOrElse {
-      Housekeeping.memoPut("ivf_index_store", ivfMemoKey(d), dir => {
-        val trained = Housekeeping.cacheBounded("ivf_index", ivfTrained(s, d))
-        // partitionBy(cell): K directories — at 100 TB each holds that cell's
-        // shard of the corpus, and a probe reads ONLY its probed cells' files
-        trained.write.mode("overwrite").partitionBy("cell")
-          .parquet(dir.resolve("cells").toString)
-        ivfCentroidsOf(s, trained).write.mode("overwrite")
-          .parquet(dir.resolve("centroids").toString)
-      })
+    Housekeeping.indexStore(s"ivf_index_v1|$d") { dir =>
+      val trained = Housekeeping.cacheBounded("ivf_index", ivfTrained(s, d))
+      // partitionBy(cell): K directories — at 100 TB each holds that cell's
+      // shard of the corpus, and a probe reads ONLY its probed cells' files
+      trained.write.mode("overwrite").partitionBy("cell")
+        .parquet(dir.resolve("cells").toString)
+      ivfCentroidsOf(s, trained).write.mode("overwrite")
+        .parquet(dir.resolve("centroids").toString)
     }
 
   /** Probe-only search against a persisted index: NO k-means stages, no
@@ -1069,35 +1045,31 @@ object LlmOps {
     * the file list is filtered to the probed cells before Spark ever lists
     * or opens a file — file skipping from metadata, the Delta/Iceberg read
     * pattern, which keeps working when one cell spans generations. */
-  private def ivfAppendMemoKey(d: String) = s"ivf_append_v2|$d"
-
   def ivfAppendIndexPath(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
-    Housekeeping.memoGet("ivf_append_store", ivfAppendMemoKey(d)).getOrElse {
-      Housekeeping.memoPut("ivf_append_store", ivfAppendMemoKey(d), dir => {
-        val corpus = withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc")
-        val cellsDir = dir.resolve("cells")
-        // BUILD (once): train on the base corpus, freeze the centroids, and
-        // store the base's FINAL one-pass assignment against those frozen
-        // centroids (not the training iteration's cells, which were made
-        // against the second-to-last centroids) — so base ∪ delta is, by
-        // construction, exactly a full reassignment against the frozen
-        // centroids and the append-equals-rebuild contract holds row-exactly
-        val base = corpus.where(pmod(col("neighbor_id"), lit(5)) =!= 0)
-        val cents = ivfCentroidsOf(s, ivfTrain(s, base))
-        cents.write.mode("overwrite").parquet(dir.resolve("centroids").toString)
-        assignToCells(base, cents).withColumn("cell_dir", col("cell"))
-          .write.partitionBy("cell_dir").parquet(cellsDir.resolve("gen1").toString)
-        TableManifest.commit(cellsDir, 1,
-          TableManifest.parquetFiles(cellsDir.resolve("gen1")))
-        // APPEND (∝ delta): assign ONLY the delta against the frozen
-        // centroids, write its cell files, commit v2 = v1 ∪ gen2 by rename
-        val delta = corpus.where(pmod(col("neighbor_id"), lit(5)) === 0)
-        assignToCells(delta, cents).withColumn("cell_dir", col("cell"))
-          .write.partitionBy("cell_dir").parquet(cellsDir.resolve("gen2").toString)
-        TableManifest.commit(cellsDir, 2,
-          TableManifest.filesAsOf(cellsDir, 1) ++
-            TableManifest.parquetFiles(cellsDir.resolve("gen2")))
-      })
+    Housekeeping.indexStore(s"ivf_append_v2|$d") { dir =>
+      val corpus = withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc")
+      val cellsDir = dir.resolve("cells")
+      // BUILD (once): train on the base corpus, freeze the centroids, and
+      // store the base's FINAL one-pass assignment against those frozen
+      // centroids (not the training iteration's cells, which were made
+      // against the second-to-last centroids) — so base ∪ delta is, by
+      // construction, exactly a full reassignment against the frozen
+      // centroids and the append-equals-rebuild contract holds row-exactly
+      val base = corpus.where(pmod(col("neighbor_id"), lit(5)) =!= 0)
+      val cents = ivfCentroidsOf(s, ivfTrain(s, base))
+      cents.write.mode("overwrite").parquet(dir.resolve("centroids").toString)
+      assignToCells(base, cents).withColumn("cell_dir", col("cell"))
+        .write.partitionBy("cell_dir").parquet(cellsDir.resolve("gen1").toString)
+      TableManifest.commit(cellsDir, 1,
+        TableManifest.parquetFiles(cellsDir.resolve("gen1")))
+      // APPEND (∝ delta): assign ONLY the delta against the frozen
+      // centroids, write its cell files, commit v2 = v1 ∪ gen2 by rename
+      val delta = corpus.where(pmod(col("neighbor_id"), lit(5)) === 0)
+      assignToCells(delta, cents).withColumn("cell_dir", col("cell"))
+        .write.partitionBy("cell_dir").parquet(cellsDir.resolve("gen2").toString)
+      TableManifest.commit(cellsDir, 2,
+        TableManifest.filesAsOf(cellsDir, 1) ++
+          TableManifest.parquetFiles(cellsDir.resolve("gen2")))
     }
 
   /** Probe an [[ivfAppendIndexPath]] index AS OF a manifest version:
@@ -1195,7 +1167,7 @@ object LlmOps {
         Housekeeping.scratchDir("ivf_stream_idx"))
       val cellsDir = root.resolve("cells")
       // base index: the standing 4/5 corpus assigned against the frozen
-      // centroids — BYTE-IDENTICAL to the memoized staged store's gen1 by
+      // centroids — BYTE-IDENTICAL to the build-once index store's gen1 by
       // construction, so the run-local mutable root is seeded by a driver-
       // side file copy instead of re-running the base assignment job per
       // invocation (round 17; fixture economics, not semantics — the
@@ -1322,7 +1294,7 @@ object LlmOps {
         .map(_.toLong).getOrElse(100000L)
       val root = Housekeeping.tempDirBounded("ivf_streamref_idx",
         Housekeeping.scratchDir("ivf_streamref_idx"))
-      // seed the run-local mutable root from the memoized staged store by
+      // seed the run-local mutable root from the build-once index store by
       // driver-side file copy (see streamAnnIvfAppend — identical content
       // by construction; the per-invocation base assignment job is the
       // staged store's gen1)
@@ -1441,27 +1413,23 @@ object LlmOps {
     * price the append path amortizes away between refreshes — but the SWAP
     * is one metadata rename regardless of corpus size, and probes keep
     * manifest-level cell pruning across the swap. */
-  private def ivfRetrainMemoKey(d: String) = s"ivf_retrain_v1|$d"
-
   def ivfRetrainIndexPath(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
-    Housekeeping.memoGet("ivf_retrain_store", ivfRetrainMemoKey(d)).getOrElse {
-      Housekeeping.memoPut("ivf_retrain_store", ivfRetrainMemoKey(d), dir => {
-        val corpus = Housekeeping.cacheBounded("ivf_retrain_corpus",
-          withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc"))
-        // one generation = one centroid table + the full corpus's inverted
-        // file against it; the returned file list is what the version commits
-        def writeGen(gen: Int, cents: DataFrame): Seq[java.nio.file.Path] = {
-          cents.write.mode("overwrite").parquet(dir.resolve(s"centroids/gen$gen").toString)
-          assignToCells(corpus, cents).withColumn("cell_dir", col("cell"))
-            .write.mode("overwrite").partitionBy("cell_dir")
-            .parquet(dir.resolve(s"cells/gen$gen").toString)
-          TableManifest.parquetFiles(dir.resolve(s"centroids/gen$gen")) ++
-            TableManifest.parquetFiles(dir.resolve(s"cells/gen$gen"))
-        }
-        val base = corpus.where(pmod(col("neighbor_id"), lit(5)) =!= 0)
-        TableManifest.commit(dir, 1, writeGen(1, ivfCentroidsOf(s, ivfTrain(s, base))))
-        TableManifest.commit(dir, 2, writeGen(2, ivfCentroidsOf(s, ivfTrain(s, corpus))))
-      })
+    Housekeeping.indexStore(s"ivf_retrain_v1|$d") { dir =>
+      val corpus = Housekeeping.cacheBounded("ivf_retrain_corpus",
+        withVec(Tables.embeddings(s, d), "neighbor_id", "vc", "nc"))
+      // one generation = one centroid table + the full corpus's inverted
+      // file against it; the returned file list is what the version commits
+      def writeGen(gen: Int, cents: DataFrame): Seq[java.nio.file.Path] = {
+        cents.write.mode("overwrite").parquet(dir.resolve(s"centroids/gen$gen").toString)
+        assignToCells(corpus, cents).withColumn("cell_dir", col("cell"))
+          .write.mode("overwrite").partitionBy("cell_dir")
+          .parquet(dir.resolve(s"cells/gen$gen").toString)
+        TableManifest.parquetFiles(dir.resolve(s"centroids/gen$gen")) ++
+          TableManifest.parquetFiles(dir.resolve(s"cells/gen$gen"))
+      }
+      val base = corpus.where(pmod(col("neighbor_id"), lit(5)) =!= 0)
+      TableManifest.commit(dir, 1, writeGen(1, ivfCentroidsOf(s, ivfTrain(s, base))))
+      TableManifest.commit(dir, 2, writeGen(2, ivfCentroidsOf(s, ivfTrain(s, corpus))))
     }
 
   /** Probe a retrain/swap index AS OF a manifest version: the version's file
@@ -2065,9 +2033,9 @@ object LlmOps {
     * bucket count TRACKS the corpus automatically ([[knnLshBitsFor]]:
     * ⌈log₂ n⌉ − 3, expected occupancy ≈ 8 at any size) and the probe radius
     * widens to Hamming-2 once the code is wide enough to afford it
-    * ([[knnLshProbeFor]]) — `graft.knn.lsh.bits` / `graft.knn.lsh.probe`
-    * override both. Each +1 bit halves expected occupancy and with it
-    * candidate work, at the usual recall-per-probe price.
+    * ([[knnLshProbeFor]]) — `graft.knn.lsh.bits` overrides the width.
+    * Each +1 bit halves expected occupancy and with it candidate work, at
+    * the usual recall-per-probe price.
     * KnnGraphRecallSpec pins all directions: the recall floors (0.60 at the
     * 500-vector testdata, 0.80 at the 8192-vector uniform fixture where
     * Hamming-2 fires), strictly shrinking candidate work as bits grow, and
@@ -2075,7 +2043,6 @@ object LlmOps {
     * the worst case throughout — real corpora cluster, and clustered
     * buckets prune far harder at the same width. */
   val KnnLshBitsConf = "graft.knn.lsh.bits"
-  val KnnLshProbeConf = "graft.knn.lsh.probe"
 
   /** AUTO-SIZED code width (round 14; the round-13 verdict's #5): the fixed
     * default was right for 10²–10⁴ corpora but a 10⁹-vector corpus run at 6
@@ -2094,7 +2061,7 @@ object LlmOps {
     * ≥ 10 bits wide — there the extra C(bits,2) probes cost O(log²n) per row
     * against occupancy-8 buckets and buy the recall a production graph
     * needs (KnnGraphRecallSpec re-pins ≥ 0.80 on the uniform-random worst
-    * case at the fixture size). Manual override: [[KnnLshProbeConf]]. */
+    * case at the fixture size). */
   private[graft] def knnLshProbeFor(n: Long): Int = if (n >= 8192) 2 else 1
 
   /** AUTO table count: recall lost to the wider auto-sized codes is bought
@@ -2108,13 +2075,12 @@ object LlmOps {
     * FALLS as the corpus grows (tables · probes · occupancy / n), so the
     * fixture bound is the conservative end. */
   private[graft] def knnLshTablesFor(n: Long): Int = if (n >= 8192) 12 else 4
-  val KnnLshTablesConf = "graft.knn.lsh.tables"
 
   /** The ONE LSH sizing policy — shared by [[lshCandidates]] (sim-search)
     * and [[knnGraphCandidates]] (graph), so the "width must track the
     * corpus" rule can't silently hold for one generator and not the other.
-    * Returns (tables, bits, probeRadius); each manual conf overrides its
-    * auto value.
+    * Returns (tables, bits, probeRadius); [[KnnLshBitsConf]] overrides the
+    * auto width.
     *
     * `querySide = true` doubles the auto table count: a query-side probe's
     * work is ∝ queries × probes × occupancy — independent of the corpus
@@ -2124,17 +2090,11 @@ object LlmOps {
     * cannot afford the same doubling without breaching its work bound. */
   private def lshParams(s: org.apache.spark.sql.SparkSession, corpusRows: Long,
                         querySide: Boolean = false): (Int, Int, Int) = {
-    val confTables = s.conf.get(KnnLshTablesConf, "")
-    val autoTables = knnLshTablesFor(corpusRows) * (if (querySide) 2 else 1)
-    val nTables = if (confTables.nonEmpty) confTables.toInt else autoTables
-    require(nTables >= 1 && nTables <= 32, s"$KnnLshTablesConf out of range: $nTables")
+    val nTables = knnLshTablesFor(corpusRows) * (if (querySide) 2 else 1)
     val confBits = s.conf.get(KnnLshBitsConf, "")
     val nBits = if (confBits.nonEmpty) confBits.toInt else knnLshBitsFor(corpusRows)
     require(nBits >= 1 && nBits <= 24, s"$KnnLshBitsConf out of range: $nBits")
-    val confProbe = s.conf.get(KnnLshProbeConf, "")
-    val radius = if (confProbe.nonEmpty) confProbe.toInt else knnLshProbeFor(corpusRows)
-    require(radius >= 0 && radius <= 2, s"$KnnLshProbeConf out of range: $radius")
-    (nTables, nBits, radius)
+    (nTables, nBits, knnLshProbeFor(corpusRows))
   }
 
   /** Probe-mask literal array for a Hamming radius: the identity mask, every
@@ -2611,17 +2571,13 @@ object LlmOps {
     * assignment table a sharded tokenizer job consumes.
     *
     * Scale notes (100 TB): pair stage and CC are the shared near-dup
-    * machinery (memo-read when the jaccard producer already ran); the
-    * representative-hash join is an equi-join on rep_id; everything else
-    * is scan-local. */
+    * machinery; the representative-hash join is an equi-join on rep_id;
+    * everything else is scan-local. */
   val splitClusterSafe: Op = Op(
     "split_cluster_safe",
     (s, d) => {
-      val pairs = Housekeeping.memoGet("ngram_pairs", ngramMemoKey(d))
-        .map(p => s.read.parquet(p.resolve("pairs").toString))
-        .getOrElse(ngramPairs(Tables.documents(s, d)))
-      val clusters = ccKeep(pairs)
       val docs = Tables.documents(s, d)
+      val clusters = ccKeep(ngramPairs(docs))
       val withRep = docs.select(col("doc_id"))
         .join(clusters.withColumnRenamed("keep_id", "rep_id"), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
@@ -2652,8 +2608,8 @@ object LlmOps {
     * as the total tie-break), not the smallest id. Min-id keep silently
     * prefers whichever copy was ingested first — often the truncated or
     * boilerplate-wrapped one; quality-ranked keep preserves the fullest
-    * copy. Same CC kernel (min-label propagation over the shared
-    * materialized pair table), then ONE argmax-by-struct aggregate per
+    * copy. Same CC kernel (min-label propagation over the [[ngramPairs]]
+    * pair stage), then ONE argmax-by-struct aggregate per
     * component — `max(struct(quality, -doc_id))` is associative, so the
     * keeper decision merges map-side like any aggregate.
     *
@@ -2664,10 +2620,7 @@ object LlmOps {
   val dedupClusterKeepBest: Op = Op(
     "dedup_cluster_keep_best",
     (s, d) => {
-      val labels = ccKeep(
-        Housekeeping.memoGet("ngram_pairs", ngramMemoKey(d))
-          .map(p => s.read.parquet(p.resolve("pairs").toString))
-          .getOrElse(ngramPairs(Tables.documents(s, d))))
+      val labels = ccKeep(ngramPairs(Tables.documents(s, d)))
         .select(col("doc_id"), col("keep_id").as("cluster_id"))
       val members = labels.join(
         Tables.documents(s, d).select("doc_id", "n_chars"), "doc_id")

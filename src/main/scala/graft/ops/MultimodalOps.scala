@@ -535,24 +535,9 @@ object MultimodalOps {
       "FROM s a JOIN s b ON a.doc_id < b.doc_id " +
       "WHERE bit_count(xor(a.sig, b.sig)) <= 7)"
 
-  /** The pair stage is SHARED with dedup_image_cluster_keep through the
-    * same materialization memo as the text side's ngram pair table
-    * ([[Housekeeping.memoPut]]): the phash query is the PRODUCER — it
-    * always recomputes the PNG-synth/decode/dHash pass and pays the pair
-    * write inside its own measurement — and cluster_keep reads the pair
-    * parquet back instead of re-running the image scan. (longs + ints
-    * round-trip parquet bit-identically; the staged signature table the
-    * oracle reads is written by whichever path ran.) */
-  private def imagePairsMemoKey(d: String) = s"image_pairs_v1|$d"
-
   val dedupImagePhash: Op = Op(
     "dedup_image_phash",
-    (s, d) => {
-      val path = Housekeeping.memoPut("image_pairs", imagePairsMemoKey(d),
-        dir => imagePhashPairs(s, d).write.mode("overwrite")
-          .parquet(dir.resolve("pairs").toString))
-      s.read.parquet(path.resolve("pairs").toString).orderBy("doc_a", "doc_b")
-    },
+    (s, d) => imagePhashPairs(s, d).orderBy("doc_a", "doc_b"),
     Some(s"WITH $imagePairSql " +
       "SELECT doc_a, doc_b, hamming FROM j ORDER BY doc_a, doc_b"))
 
@@ -566,10 +551,7 @@ object MultimodalOps {
     * recursive CTE over the staged signature pairs. */
   val dedupImageClusterKeep: Op = Op(
     "dedup_image_cluster_keep",
-    (s, d) => LlmOps.ccKeep(
-      Housekeeping.memoGet("image_pairs", imagePairsMemoKey(d))
-        .map(p => s.read.parquet(p.resolve("pairs").toString))
-        .getOrElse(imagePhashPairs(s, d))),
+    (s, d) => LlmOps.ccKeep(imagePhashPairs(s, d)),
     Some(s"WITH RECURSIVE $imagePairSql, " +
       "e AS (SELECT doc_a AS src, doc_b AS dst FROM j UNION ALL SELECT doc_b, doc_a FROM j), " +
       "cc(node, label) AS (SELECT DISTINCT src, src FROM e " +

@@ -81,8 +81,8 @@ object SkewOps {
   /** Hot keys for [[joinSkewHybrid]], read OFF THE COMMITTED STANDING SKEW
     * REPORT ([[DqOps.joinSkewReport]] — a [[TableManifest]]-versioned
     * artifact since round 16: consumers read the committed version and pay
-    * measurement only when none exists or `graft.skew.remeasure` forces a
-    * fresh epoch, so building this plan against a committed report runs
+    * measurement only when none exists (`dq_join_skew_report` re-measures),
+    * so building this plan against a committed report runs
     * zero report-side aggregates — HybridSkewSpec pins the job count).
     * This is the consume side of `dq_join_skew_report`'s measure→route
     * loop (round 15; the round-14 verdict's #2). Routing

@@ -63,9 +63,8 @@ object StreamingOps {
     * ~2.5× faster). On a cluster you'd size this to state volume the same
     * way. The session's batch setting is restored before the op returns
     * (thread-safety caveat in [[Housekeeping.withShufflePartitions]]). */
-  private[graft] def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A =
-    Housekeeping.withShufflePartitions(s,
-      s.conf.getOption("graft.stream.statePartitions").map(_.toInt).getOrElse(n))(body)
+  private[graft] def withStatePartitions[A](s: SparkSession)(body: => A): A =
+    Housekeeping.withShufflePartitions(s, 8)(body)
 
   /** Run a drained streaming query, then delete the dirs it no longer
     * needs (staged source + checkpoint — the results live elsewhere). */
@@ -84,7 +83,7 @@ object StreamingOps {
       Housekeeping.tempViewBounded("st_tumble", s, qn)
       val (src, srcDir) = eventStream(s, d)
       val ckpt = tmp("ckpt_tumble")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         val q = src
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"))
@@ -110,7 +109,7 @@ object StreamingOps {
         Housekeeping.scratchDir("st_dedup_out")).toString
       val (src, srcDir) = eventStream(s, d)
       val ckpt = tmp("st_dedup_ckpt")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         val q = src
           .withWatermark("ts", "10 minutes")
           .dropDuplicates("event_id")
@@ -134,7 +133,7 @@ object StreamingOps {
       Housekeeping.tempViewBounded("st_sess", s, qn)
       val (src, srcDir) = eventStream(s, d)
       val ckpt = tmp("ckpt_sess")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         val q = src
           .withWatermark("ts", "10 minutes")
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
@@ -200,7 +199,7 @@ object StreamingOps {
         Housekeeping.scratchDir("st_late_out")).toString
       val ckpt = tmp("ckpt_late")
       val ev = graft.tables.Tables.events(s, d).select("event_id", "ts")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         (0 to 2).foreach { k =>
           stageDelivery(ev.where(pmod(col("event_id"), lit(3)) === k),
             srcDir, s"delivery$k.parquet")
@@ -289,7 +288,7 @@ object StreamingOps {
         .parquet(dirP.toString)
         .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
       val ckpt = tmp("ckpt_join")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(dirP.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(dirP.toString, ckpt)) {
         val purchases = srcP.where(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"), col("user_id").as("u1"), col("ts").as("t1"))
           .withWatermark("t1", "10 minutes")
@@ -330,7 +329,7 @@ object StreamingOps {
       val dim = graft.tables.Tables.customer(s, d)
         .select(col("c_custkey").as("circuit_id"), col("c_nationkey").as("nation"))
       val ckpt = tmp("ckpt_enrich")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         val q = src
           .withWatermark("ts", "10 minutes")
           .join(broadcast(dim), col("user_id") === col("circuit_id"))
@@ -374,7 +373,7 @@ object StreamingOps {
         Housekeeping.scratchDir("st_state_out")).toString
       val (src, srcDir) = eventStream(s, d)
       val ckpt = tmp("ckpt_state")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
       val q = src
         .select(col("user_id"), col("value")).as[(Long, Double)](rowEnc)
         .groupByKey(_._1)(Encoders.scalaLong)
@@ -460,7 +459,7 @@ object StreamingOps {
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       Housekeeping.withSessionConf(s, providerKey ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         val q = src
           .select(col("user_id"), col("value")).as[(Long, Double)](rowEnc)
           .groupByKey(_._1)(Encoders.scalaLong)
@@ -569,7 +568,7 @@ object StreamingOps {
       // re-upload slice: every 10th event of delivery 1, resent in delivery 2
       val d2 = raw.where(col("ts_us") > cut).drop("ts_us")
         .unionAll(d1.where(col("event_id") % 10 === 0))
-      def drain(): Unit = withStatePartitions(s, 8) {
+      def drain(): Unit = withStatePartitions(s) {
         val q = s.readStream.schema(graft.tables.Tables.rawEventsSchema)
           .parquet(srcDir.toString)
           .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
@@ -698,7 +697,7 @@ object StreamingOps {
         .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
       val srcDir = Housekeeping.scratchDir("st_backfill_src")
       val ckpt = tmp("st_backfill_ckpt")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         stageDelivery(raw.where(to_date(col("ts")) >= lit(cutDay))
           .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"),
             col("user_id"), col("event_type"), col("value"), col("props")),
@@ -835,7 +834,7 @@ object StreamingOps {
         .parquet(dirP.toString)
         .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
       val ckpt = tmp("ckpt_ljoin")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(dirP.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(dirP.toString, ckpt)) {
         val purchases = srcP.where(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"), col("user_id").as("u1"), col("ts").as("t1"))
           .withWatermark("t1", "10 minutes")
@@ -902,7 +901,7 @@ object StreamingOps {
       val (src, srcDir) = eventStream(s, d)
       val ckpt = tmp("ckpt_cutoff")
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         val q = src
           .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
             col("event_type"), col("value"))
@@ -1139,7 +1138,7 @@ object StreamingOps {
   }
 
   /** `stream_index_compact` — the compaction demonstrated end to end on a
-    * standing table laid out EXACTLY as the per-batch folds leave it: N
+    * standing table laid out EXACTLY as the per-batch folds leave it: 10
     * generations (one manifest version each, range-clustered on doc_id
     * within the generation), whose doc_id ranges all overlap ACROSS
     * generations — so every point probe touches ~1 file *per generation*
@@ -1154,7 +1153,7 @@ object StreamingOps {
   val streamIndexCompact: Op = Op(
     "stream_index_compact",
     (s, d) => {
-      val nGens = s.conf.getOption("graft.compact.gens").map(_.toInt).getOrElse(10)
+      val nGens = 10
       val root = Housekeeping.tempDirBounded("st_compact_root",
         Housekeeping.scratchDir("st_compact_root"))
       recordRoot("compact", d, root.toString)
@@ -1222,7 +1221,7 @@ object StreamingOps {
               size(array_union(col("sh_a"), col("sh_b"))))
           .where(col("jaccard") >= 0.8)
           .select("doc_a", "doc_b", "jaccard")
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         // deliveries split by doc_id mod n ([[stageModDeliveries]]): planted
         // duplicate pairs (adjacent ids) straddle deliveries, so the
         // cross-batch probe path carries real matches, not just the
@@ -1440,7 +1439,7 @@ object StreamingOps {
       val docs = graft.tables.Tables.documents(s, d).select("doc_id", "text", "n_chars")
       val cleanDir = s"$root/clean"
       val quarDir = s"$root/quarantine"
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         stageModDeliveries(docs, srcDir, deliveryCount(s))
         val q = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
@@ -1572,7 +1571,7 @@ object StreamingOps {
       val dictDir = s"$root/dict"
       val hitsDir = s"$root/hits"
       val shDir = s"$root/shingles"
-      withStatePartitions(s, 8) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
         stageModDeliveries(docs, srcDir, deliveryCount(s))
         val q = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")

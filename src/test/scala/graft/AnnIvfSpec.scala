@@ -43,10 +43,11 @@ class AnnIvfSpec extends AnyFunSuite {
     graft.ops.Housekeeping.releaseAll()
     val probe1 = LlmOps.simSearchAnnProbe.fn(spark, TestSpark.sf001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    // second probe memo-hits the index (releaseAll keeps memos): same result
+    // second probe reads the index store the first one built (releaseAll
+    // keeps index stores): same result
     val probe2 = LlmOps.simSearchAnnProbe.fn(spark, TestSpark.sf001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(probe1.sameElements(ivf), "probe ranking diverged from the trainer's")
-    assert(probe2.sameElements(ivf), "memo-hit probe diverged")
+    assert(probe2.sameElements(ivf), "probe of the existing index store diverged")
   }
 }

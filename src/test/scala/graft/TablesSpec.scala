@@ -2,13 +2,10 @@ package graft
 
 import graft.ops.GraftCatalog
 import graft.tables.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.types.{StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The declared table schemas in [[Tables.schemas]]: each equals what Spark
   * infers from the files, and opening a table through them costs no job. */
@@ -42,31 +39,15 @@ class TablesSpec extends AnyFunSuite {
 
   test("opening every table and registering the SQL views starts no Spark job") {
     val s = spark.newSession()
-    val sc = s.sparkContext
-    // count only this thread's jobs: the tag is a thread-local property
-    // every job started from here carries
-    val tag = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.test.tag") == tag)
-          jobs.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.tag", tag)
-    try {
+    val (_, opening) = ListenerBus.jobsStarted(s.sparkContext) {
       loaders.foreach { case (_, load) => load(s, TestSpark.sf001) }
       GraftCatalog.registerAll(s, TestSpark.sf001)
-      ListenerBus.drain(sc)
-      assert(jobs.get == 0, s"${jobs.get} jobs started while opening tables")
-      // the views are live and typed: a query through them runs
-      assert(s.sql("SELECT COUNT(*) FROM events").first().getLong(0) > 0)
-      ListenerBus.drain(sc)
-      assert(jobs.get > 0, "the tag did not reach the query's jobs")
-    } finally {
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(listener)
     }
+    assert(opening == 0, s"$opening jobs started while opening tables")
+    // the views are live and typed: a query through them runs
+    val (rows, querying) = ListenerBus.jobsStarted(s.sparkContext)(
+      s.sql("SELECT COUNT(*) FROM events").first().getLong(0))
+    assert(rows > 0)
+    assert(querying > 0, "the tag did not reach the query's jobs")
   }
 }
