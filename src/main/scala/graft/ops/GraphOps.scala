@@ -1,14 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
 
 /** Graph analytics over a link graph derived from the fact table — the
-  * iterative-algorithm family (PageRank et al.) that sits beside dedup's
-  * connected components ([[LlmOps.ccKeep]]) in any large-scale pipeline that
+  * iterative-algorithm family (PageRank et al.), whose connected-components
+  * kernel ([[components]]) also makes dedup's keep-one-per-cluster decision
+  * ([[LlmOps.ccKeep]]), in any large-scale pipeline that
   * ranks entities by link structure (web-corpus URL ranking, citation
   * weighting, product affinity).
   *
@@ -34,8 +35,8 @@ import graft.tables.Tables
   * current rank vector (both hash-partitioned on the node key — a co-located
   * join under bucketing) plus one map-side-combinable groupBy sum; no
   * all-pairs stage, no driver-resident state beyond the single node count.
-  * [[Housekeeping.iterationBarrier]] truncates lineage each round exactly
-  * as [[LlmOps.ccKeep]] does, so the plan does not grow with iterations
+  * [[Housekeeping.iterationBarrier]] truncates lineage each round, as in
+  * every iterative kernel here, so the plan does not grow with iterations
   * (A/B: the checkpoint-free single-plan variant measured no faster at
   * bench scale — the materialization barrier costs nothing here and buys
   * bounded plans). The barrier is conf-switchable: `localCheckpoint(true)`
@@ -52,26 +53,55 @@ object GraphOps {
   private val Damp = 85L // /100
   private val Iters = 5
 
-  /** Part-transition edge list: consecutive-line transitions within an
-    * order, distinct, self-loops removed. Shared by both graph keys. */
-  private def edges(s: SparkSession, d: String): DataFrame = {
+  /** Part transitions: consecutive-line transitions within an order,
+    * self-loops removed, one row per (src, dst) with `w` = how often it
+    * occurs. Every graph key reads its graph from here. */
+  private[graft] def transitions(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     Tables.lineitem(s, d)
       .select(col("l_partkey").as("src"),
         lead(col("l_partkey"), 1).over(w).as("dst"))
       .where(col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
+      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
   }
 
-  /** The oracle's spelling of the same edge list. */
-  private val edgeCtes =
+  /** The distinct directed edge list (PageRank, degrees, triangles, BFS). */
+  private def edges(s: SparkSession, d: String): DataFrame =
+    transitions(s, d).select(col("src"), col("dst"))
+
+  /** The FREQUENT-transition subgraph (pair seen ≥ 2 times), undirected:
+    * both directions, distinct, cached. The raw transition graph is one
+    * giant component (a 1-row census — verified at sf0.001/0.01/0.1), while
+    * repeated transitions fragment into real affinity clusters — the
+    * structure CC, label propagation and modularity are FOR. Same scale
+    * shape: the weighting is one extra map-side-combinable groupBy. */
+  private[graft] def frequentUndirected(s: SparkSession, d: String): DataFrame = {
+    val fe = transitions(s, d).where(col("w") >= 2).select(col("src"), col("dst"))
+    Housekeeping.cacheBounded("freq_und",
+      fe.union(fe.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+  }
+
+  /** The oracle's spelling of [[transitions]]: `tr(src, dst, w)`. */
+  private val transitionCtes =
     "e0 AS (SELECT l_partkey AS src, lead(l_partkey) OVER " +
       "(PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst FROM lineitem), " +
-      "edges AS (SELECT DISTINCT src, dst FROM e0 " +
-      "WHERE dst IS NOT NULL AND dst <> src), " +
+      "tr AS (SELECT src, dst, COUNT(*) AS w FROM e0 " +
+      "WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2)"
+
+  /** The oracle's spelling of [[edges]], its nodes and out-degrees. */
+  private val edgeCtes =
+    transitionCtes + ", " +
+      "edges AS (SELECT src, dst FROM tr), " +
       "nodes AS (SELECT DISTINCT v FROM " +
       "(SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges)), " +
       "outdeg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY 1)"
+
+  /** The oracle's spelling of [[frequentUndirected]]: `fe` the frequent
+    * directed transitions, `und` both directions of them. */
+  private val frequentCtes =
+    transitionCtes + ", " +
+      "fe AS (SELECT src, dst FROM tr WHERE w >= 2), " +
+      "und AS MATERIALIZED (SELECT src, dst FROM fe UNION SELECT dst, src FROM fe)"
 
   /** Five fixed damped-PageRank rounds, bit-exact across engines.
     *
@@ -106,8 +136,8 @@ object GraphOps {
         e0.join(e0.groupBy(col("src")).agg(count(lit(1)).as("d")), "src"))
       val nodes = Housekeeping.cacheBounded("graph_nodes",
         e.select(col("src").as("v")).union(e.select(col("dst"))).distinct())
-      // The one driver-side scalar (cf. ccKeep's convergence aggregate):
-      // node count feeds the teleport constant, never row data.
+      // The one driver-side scalar (the other loops observe theirs on the
+      // barrier job): node count feeds the teleport constant, never row data.
       val n = nodes.count()
       val teleport = (Scale * 15L / 100L) / n
       // Nodes with NO in-edges receive zero contributions every round, so
@@ -225,7 +255,7 @@ object GraphOps {
   /** Multi-source BFS levels: every node's hop distance (≤ 6) from the seed
     * set (nodes with key ≡ 0 mod 97 — a deterministic ~1 % sample), the
     * frontier-expansion algorithm the iterative family was missing beside
-    * PageRank (weighted fixpoint) and ccKeep (label propagation). Used at
+    * PageRank (weighted fixpoint) and [[components]] (label propagation). Used at
     * scale for influence radii, contamination blast-zones, and
     * "within-k-hops-of-flagged" joins. All-integer levels, so the recursive
     * CTE oracle (UNION-dedup'd (node, lvl) pairs, MIN per node) compares
@@ -244,29 +274,25 @@ object GraphOps {
       val e = Housekeeping.cacheBounded("bfs_edges", edges(s, d))
       val nodes = e.select(col("src").as("v"))
         .union(e.select(col("dst").as("v"))).distinct()
-      // The frontier-empty check RIDES the barrier job via observe() (round
-      // 18, the ccLabelsRounds idiom): the same materialization that
-      // truncates lineage also counts the frontier — was a separate
-      // isEmpty() job per depth.
-      var frontierRows = 0L
-      def barrierCounted(df: DataFrame): DataFrame = {
-        val obs = org.apache.spark.sql.Observation()
-        val out = Housekeeping.iterationBarrier(
-          df.observe(obs, count(lit(1)).as("n")))
-        frontierRows = Housekeeping.observed(obs, "graph_bfs_levels")("n").asInstanceOf[Long]
-        out
-      }
-      var labels = barrierCounted(nodes.where(col("v") % 97 === 0)
-        .select(col("v").as("node"), lit(0).as("level")))
-      var frontier = labels
+      // The frontier-empty check RIDES the barrier job
+      // ([[Housekeeping.observedBarrier]]): the same materialization that
+      // truncates lineage also counts the frontier, so the check costs no
+      // job of its own.
+      val n = count(lit(1)).as("n")
+      val (seeds, seeded) = Housekeeping.observedBarrier(nodes.where(col("v") % 97 === 0)
+        .select(col("v").as("node"), lit(0).as("level")), "graph_bfs_levels")(n)
+      var labels = seeds
+      var frontier = seeds
+      var frontierRows = seeded("n").asInstanceOf[Long]
       var depth = 0
       while (depth < MaxDepth && frontierRows > 0) {
         depth += 1
-        val next = frontier.join(e, frontier("node") === e("src"))
-          .select(col("dst").as("node"), lit(depth).as("level"))
-          .distinct()
-          .join(labels, Seq("node"), "left_anti")
-          .transform(barrierCounted)
+        val (next, counted) = Housekeeping.observedBarrier(
+          frontier.join(e, frontier("node") === e("src"))
+            .select(col("dst").as("node"), lit(depth).as("level"))
+            .distinct()
+            .join(labels, Seq("node"), "left_anti"), "graph_bfs_levels")(n)
+        frontierRows = counted("n").asInstanceOf[Long]
         // labels is a UNION of already-checkpointed frontiers — scanning the
         // union costs nothing extra and re-materializing it per round would
         // be one wasted checkpoint job per depth (the union tree depth is
@@ -292,78 +318,60 @@ object GraphOps {
     * real data, so the fixed-round oracle below compares CONVERGED labels. */
   private[graft] val CcRounds = 8
 
-  /** Labels after `rounds` combined hash-min + pointer-jump rounds — the
-    * shared kernel of the op and its convergence spec. All-integer (labels
-    * are node ids), so every round is bit-deterministic on both engines.
-    * `earlyExit = false` disables the fixpoint early-exit so the convergence
-    * spec can compare rounds-1 vs rounds INDEPENDENTLY of the early-exit
-    * logic (with it on, both sides would stop at the same internal fixpoint
-    * and the comparison would be tautological). */
-  private[graft] def ccLabels(s: SparkSession, d: String, rounds: Int,
-      earlyExit: Boolean = true): DataFrame =
-    ccLabelsRounds(s, d, rounds, earlyExit)._1
-
-  /** [[ccLabels]] plus the number of rounds actually executed (for the
-    * early-exit-headroom assertion in GraphSpec). */
-  private[graft] def ccLabelsRounds(s: SparkSession, d: String, rounds: Int,
-      earlyExit: Boolean = true): (DataFrame, Int) = {
-    // The FREQUENT-transition subgraph (pair seen ≥ 2 times): the raw
-    // transition graph is one giant component (a 1-row census — verified at
-    // sf0.001/0.01/0.1), while repeated transitions fragment into real
-    // affinity clusters — the structure a component census is FOR. Same
-    // scale shape: the weighting is one extra map-side-combinable groupBy.
-    val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
-    val e0 = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("src"),
-        lead(col("l_partkey"), 1).over(w).as("dst"))
-      .where(col("dst").isNotNull && col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .where(col("w") >= 2)
-      .select(col("src"), col("dst"))
-    val und = Housekeeping.cacheBounded("cc_und",
-      e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
-    val nodes = und.select(col("src").as("v")).distinct()
-    // Labels are MONOTONE non-increasing per node (hash-min takes a min of
-    // self and neighbours; the jump takes a further min), and the node set
-    // is constant — so the label SUM is strictly decreasing until fixpoint
-    // and one exact-decimal aggregate per round detects convergence (the
-    // ccKeep idiom). Early exit runs the 3-4 rounds this data needs instead
-    // of all `rounds`; at the fixpoint every further round is the identity,
-    // so the result equals the fixed-round oracle's CONVERGED labels
-    // row-exactly (CcConvergenceSpec pins the slack).
-    //
-    // Round 18 (guide §1.2 — don't run a second full pass for a scalar the
-    // first pass can carry): the sum RIDES the round's own barrier job via
-    // observe(). The CollectMetrics node sits under the eager checkpoint, so
-    // the SAME materialization that truncates lineage also aggregates the
-    // label sum — previously each round paid a separate full-table aggregate
-    // job (at 100 TB: one extra pass over the label table per round).
+  /** Runs `step` from `init` for at most `maxRounds` rounds, each round
+    * through [[Housekeeping.observedBarrier]] with the metrics `aggs`, and
+    * stops after the first round whose metrics equal the previous round's.
+    * Returns the state, the rounds run and whether the last round left the
+    * metrics unchanged. The caller picks metrics that are monotone in the
+    * state, so "unchanged" proves the fixpoint. `earlyExit = false` runs all
+    * `maxRounds` so the convergence specs can compare rounds-1 vs rounds
+    * INDEPENDENTLY of the stop rule (with it on, both sides would stop at
+    * the same internal fixpoint and the comparison would be tautological). */
+  private def fixpoint(init: DataFrame, maxRounds: Int, earlyExit: Boolean, op: String)(
+      aggs: Column*)(step: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+    var (state, cur) = Housekeeping.observedBarrier(init, op)(aggs: _*)
     var r = 0
     var converged = false
-    var cur: java.math.BigDecimal = null // sum after the previous round; primed below
-    def barrierObserved(df: DataFrame): DataFrame = {
-      if (!earlyExit) return Housekeeping.iterationBarrier(df)
-      val obs = org.apache.spark.sql.Observation()
-      val out = Housekeeping.iterationBarrier(
-        df.observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("s")))
-      val ns = Option(Housekeeping.observed(obs, "ccLabelsRounds")("s")
-        .asInstanceOf[java.math.BigDecimal]).getOrElse(java.math.BigDecimal.ZERO)
-      converged = cur != null && ns.compareTo(cur) == 0
-      cur = ns
-      out
-    }
-    var labels = barrierObserved(nodes.withColumn("lbl", col("v")))
-    while (r < rounds && !converged) {
+    while (r < maxRounds && !(earlyExit && converged)) {
       r += 1
-      // the jump self-joins `half` on two DIFFERENT keys (h.lbl vs j.v),
-      // but half's own final exchange (groupBy v) is identical for both
-      // sides, so AQE stage reuse computes the half-step once — an explicit
-      // barrier here measured SLOWER (extra eager job per round)
-      val half = Housekeeping.iterationBarrier(ccHalfStep(und, labels))
-      labels = barrierObserved(ccJumpStep(half))
+      val (next, m) = Housekeeping.observedBarrier(step(state), op)(aggs: _*)
+      converged = m == cur
+      state = next
+      cur = m
     }
-    (labels, r)
+    (state, r, converged)
   }
+
+  /** Connected components of an undirected `(src, dst)` edge list (both
+    * directions present): every node's label `(v, lbl)` is the minimum node
+    * id of its component. Returns the labels, the rounds run and whether
+    * the last round changed nothing. Each round is hash-min (a node takes
+    * the min of its own and its neighbours' labels) then a pointer jump
+    * (label := label of label), which halves the remaining pointer depth,
+    * so a component of diameter D settles in O(log D) rounds where hash-min
+    * alone needs D. All-integer (labels are node ids), so every round is
+    * bit-deterministic on both engines.
+    *
+    * Labels are MONOTONE non-increasing per node and the node set is
+    * constant, so the label SUM is strictly decreasing until the fixpoint:
+    * one exact-decimal sum, observed on each round's own barrier job, stops
+    * the loop. At the fixpoint every further round is the identity, so the
+    * labels equal a fixed-round run's CONVERGED labels row-exactly. */
+  private[graft] def components(und: DataFrame, maxRounds: Int,
+      earlyExit: Boolean = true): (DataFrame, Int, Boolean) =
+    fixpoint(und.select(col("src").as("v")).distinct().withColumn("lbl", col("v")),
+      maxRounds, earlyExit, "components")(sum(col("lbl").cast("decimal(38,0)")).as("s")) {
+      labels =>
+        // the jump self-joins the half-step on two DIFFERENT keys (h.lbl
+        // vs j.v); the barrier materializes it once for both sides
+        ccJumpStep(Housekeeping.iterationBarrier(ccHalfStep(und, labels)))
+    }
+
+  /** [[components]] of the [[frequentUndirected]] graph after at most
+    * `rounds` rounds — the kernel of the CC key and its convergence spec. */
+  private[graft] def ccLabels(s: SparkSession, d: String, rounds: Int,
+      earlyExit: Boolean = true): DataFrame =
+    components(frequentUndirected(s, d), rounds, earlyExit)._1
 
   /** CC half-step (round 17 spelling): each node pulls the MIN label over
     * its neighbours in ONE groupBy (never a pair-to-pair join), merged with
@@ -390,10 +398,30 @@ object GraphOps {
     half.as("h").join(half.as("j"), col("h.lbl") === col("j.v"))
       .select(col("h.v").as("v"), least(col("h.lbl"), col("j.lbl")).as("lbl"))
 
+  /** The oracle's spelling of [[ccLabels]]: [[frequentCtes]], then
+    * [[CcRounds]] fixed rounds ending in `l<CcRounds>(v, lbl)`. Every
+    * h_i / l_i is referenced twice downstream; DuckDB INLINES plain CTEs,
+    * so without MATERIALIZED the base scan fan-out is 4^rounds (observed as
+    * fd exhaustion). Materializing pins each round to one evaluation — the
+    * same thing the barrier does on the Spark side. */
+  private val ccCtes: String = {
+    val rounds = (1 to CcRounds).map { i =>
+      val prev = s"l${i - 1}"
+      s"nb$i AS (SELECT u.dst AS v, MIN(l.lbl) AS nb FROM und u " +
+        s"JOIN $prev l ON l.v = u.src GROUP BY 1), " +
+        s"h$i AS MATERIALIZED (SELECT l.v, LEAST(l.lbl, COALESCE(n.nb, l.lbl)) AS lbl " +
+        s"FROM $prev l LEFT JOIN nb$i n ON n.v = l.v), " +
+        s"l$i AS MATERIALIZED (SELECT h.v, LEAST(h.lbl, j.lbl) AS lbl " +
+        s"FROM h$i h JOIN h$i j ON j.v = h.lbl)"
+    }.mkString(", ")
+    frequentCtes + ", " +
+      "un AS (SELECT DISTINCT src AS v FROM und), " +
+      "l0 AS MATERIALIZED (SELECT v, v AS lbl FROM un), " + rounds
+  }
+
   /** Connected components of the undirected FREQUENT-transition graph via
-    * combined hash-min label propagation + pointer jumping — the scalable
-    * spelling of what [[LlmOps]]' dedup_cluster_keep does for candidate
-    * clusters, stated over a graph family where a reachability-closure
+    * the [[components]] kernel (the one dedup_cluster_keep runs over
+    * near-dup pairs), stated over a graph family where a reachability-closure
     * oracle would explode (|component|² pairs on a giant component). Both
     * engines run the SAME fixed [[CcRounds]] rounds — the oracle is the
     * identical recurrence as chained MATERIALIZED CTEs, so the compare is
@@ -412,30 +440,9 @@ object GraphOps {
       .groupBy(col("lbl").as("component"))
       .agg(count(lit(1)).as("n_nodes"), max(col("v")).as("max_node"))
       .orderBy("component"),
-    Some {
-      // Every h_i / l_i is referenced twice downstream; DuckDB INLINES plain
-      // CTEs, so without MATERIALIZED the base scan fan-out is 4^rounds
-      // (observed as fd exhaustion). Materializing pins each round to one
-      // evaluation — the same thing localCheckpoint does on the Spark side.
-      val rounds = (1 to CcRounds).map { i =>
-        val prev = s"l${i - 1}"
-        s"nb$i AS (SELECT u.dst AS v, MIN(l.lbl) AS nb FROM und u " +
-          s"JOIN $prev l ON l.v = u.src GROUP BY 1), " +
-          s"h$i AS MATERIALIZED (SELECT l.v, LEAST(l.lbl, COALESCE(n.nb, l.lbl)) AS lbl " +
-          s"FROM $prev l LEFT JOIN nb$i n ON n.v = l.v), " +
-          s"l$i AS MATERIALIZED (SELECT h.v, LEAST(h.lbl, j.lbl) AS lbl " +
-          s"FROM h$i h JOIN h$i j ON j.v = h.lbl)"
-      }.mkString(", ")
-      "WITH e0 AS (SELECT l_partkey AS src, lead(l_partkey) OVER " +
-        "(PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst FROM lineitem), " +
-        "fe AS (SELECT src, dst FROM (SELECT src, dst, COUNT(*) AS w FROM e0 " +
-        "WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2) WHERE w >= 2), " +
-        "und AS MATERIALIZED (SELECT src, dst FROM fe UNION SELECT dst, src FROM fe), " +
-        "un AS (SELECT DISTINCT src AS v FROM und), " +
-        "l0 AS MATERIALIZED (SELECT v, v AS lbl FROM un), " + rounds + " " +
-        s"SELECT lbl AS component, COUNT(*) AS n_nodes, MAX(v) AS max_node " +
-        s"FROM l$CcRounds GROUP BY 1 ORDER BY component"
-    })
+    Some(s"WITH $ccCtes " +
+      "SELECT lbl AS component, COUNT(*) AS n_nodes, MAX(v) AS max_node " +
+      s"FROM l$CcRounds GROUP BY 1 ORDER BY component"))
 
   /** Bellman-Ford relaxation rounds for [[graphShortestPath]]. Weighted
     * shortest paths need ≤ (longest shortest-path edge count) rounds;
@@ -453,53 +460,25 @@ object GraphOps {
     spDistancesRounds(s, d, rounds, earlyExit)._1
 
   /** [[spDistances]] plus the number of rounds actually executed. The
-    * `earlyExit` switch exists for the convergence spec — see [[ccLabels]]. */
+    * `earlyExit` switch exists for the convergence spec — see [[fixpoint]]. */
   private[graft] def spDistancesRounds(s: SparkSession, d: String, rounds: Int,
       earlyExit: Boolean = true): (DataFrame, Int) = {
-    val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     val e = Housekeeping.cacheBounded("sp_edges",
-      Tables.lineitem(s, d)
-        .select(col("l_partkey").as("src"),
-          lead(col("l_partkey"), 1).over(w).as("dst"))
-        .where(col("dst").isNotNull && col("src") =!= col("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .select(col("src"), col("dst"),
-          (expr("1000 div w") + lit(1L)).as("cost")))
+      transitions(s, d).select(col("src"), col("dst"),
+        (expr("1000 div w") + lit(1L)).as("cost")))
     // Per-node distances are MONOTONE non-increasing and the reached-node
     // set only grows, so an unchanged (count, sum) pair after a full round
-    // proves the Bellman-Ford fixpoint exactly (the ccKeep idiom, extended
-    // with the count because relaxation ADDS newly-reached nodes). Early
-    // exit runs the rounds this data needs instead of all `rounds`; at the
-    // fixpoint every further round is the identity, so the result equals
+    // proves the Bellman-Ford fixpoint exactly (the [[components]] rule,
+    // extended with the count because relaxation ADDS newly-reached nodes).
+    // Early exit runs the rounds this data needs instead of all `rounds`; at
+    // the fixpoint every further round is the identity, so the result equals
     // the fixed-round oracle row-exactly (SsspConvergenceSpec's slack).
-    //
-    // Round 18: the (count, sum) snapshot RIDES the round's own barrier job
-    // via observe() — see [[ccLabelsRounds]] (was a second full pass over
-    // the distance table per round).
-    var r = 0
-    var converged = false
-    var cur: (Long, java.math.BigDecimal) = null
-    def barrierObserved(df: DataFrame): DataFrame = {
-      if (!earlyExit) return Housekeeping.iterationBarrier(df)
-      val obs = org.apache.spark.sql.Observation()
-      val out = Housekeeping.iterationBarrier(df.observe(obs,
-        count(lit(1)).as("n"), sum(col("dist").cast("decimal(38,0)")).as("s")))
-      val m = Housekeeping.observed(obs, "spDistancesRounds")
-      val ns = (m("n").asInstanceOf[Long],
-        Option(m("s").asInstanceOf[java.math.BigDecimal])
-          .getOrElse(java.math.BigDecimal.ZERO))
-      converged = cur != null && ns._1 == cur._1 && ns._2.compareTo(cur._2) == 0
-      cur = ns
-      out
-    }
-    var dist = barrierObserved(e.select(col("src").as("node"))
+    val seeds = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .where(col("node") % 97 === 0)
-      .withColumn("dist", lit(0L)))
-    while (r < rounds && !converged) {
-      r += 1
-      dist = barrierObserved(spStep(e, dist))
-    }
+      .withColumn("dist", lit(0L))
+    val (dist, r, _) = fixpoint(seeds, rounds, earlyExit, "spDistancesRounds")(
+      count(lit(1)).as("n"), sum(col("dist").cast("decimal(38,0)")).as("s"))(spStep(e, _))
     (dist, r)
   }
 
@@ -551,11 +530,8 @@ object GraphOps {
           "LEAST(COALESCE(p.dist, n.nd), COALESCE(n.nd, p.dist)) AS dist " +
           s"FROM $prev p FULL OUTER JOIN nb$i n ON n.node = p.node)"
       }.mkString(", ")
-      "WITH e0 AS (SELECT l_partkey AS src, lead(l_partkey) OVER " +
-        "(PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst FROM lineitem), " +
-        "we AS MATERIALIZED (SELECT src, dst, (1000 // w) + 1 AS cost FROM " +
-        "(SELECT src, dst, COUNT(*) AS w FROM e0 " +
-        "WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2)), " +
+      s"WITH $transitionCtes, " +
+        "we AS MATERIALIZED (SELECT src, dst, (1000 // w) + 1 AS cost FROM tr), " +
         "sn AS (SELECT DISTINCT v AS node FROM " +
         "(SELECT src AS v FROM we UNION ALL SELECT dst FROM we) WHERE v % 97 = 0), " +
         "d0 AS MATERIALIZED (SELECT node, CAST(0 AS BIGINT) AS dist FROM sn), " +
@@ -589,16 +565,7 @@ object GraphOps {
   val graphLabelPropagation: Op = Op(
     "graph_label_propagation",
     (s, d) => {
-      val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
-      val e0 = Tables.lineitem(s, d)
-        .select(col("l_partkey").as("src"),
-          lead(col("l_partkey"), 1).over(w).as("dst"))
-        .where(col("dst").isNotNull && col("src") =!= col("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .where(col("w") >= 2)
-        .select(col("src"), col("dst"))
-      val und = Housekeeping.cacheBounded("lp_und",
-        e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+      val und = frequentUndirected(s, d)
       val nodes = und.select(col("src").as("v")).distinct()
       var labels = nodes.withColumn("lbl", col("v")).transform(Housekeeping.iterationBarrier)
       for (_ <- 1 to LpRounds) {
@@ -627,12 +594,7 @@ object GraphOps {
           s"l$i AS MATERIALIZED (SELECT p.v, COALESCE(k.lbl, p.lbl) AS lbl " +
           s"FROM $prev p LEFT JOIN k$i k ON k.v = p.v)"
       }.mkString(", ")
-      "WITH e0 AS (SELECT l_partkey AS src, lead(l_partkey) OVER " +
-        "(PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst FROM lineitem), " +
-        "ef AS (SELECT src, dst FROM (SELECT src, dst, COUNT(*) AS w FROM e0 " +
-        "WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2) WHERE w >= 2), " +
-        "und AS MATERIALIZED (SELECT DISTINCT src, dst FROM " +
-        "(SELECT src, dst FROM ef UNION ALL SELECT dst, src FROM ef)), " +
+      s"WITH $frequentCtes, " +
         "l0 AS MATERIALIZED (SELECT DISTINCT src AS v, src AS lbl FROM und), " +
         rounds + " " +
         s"SELECT lbl AS community, COUNT(*) AS n_members FROM l$LpRounds " +
@@ -659,20 +621,12 @@ object GraphOps {
     "graph_modularity_score",
     (s, d) => {
       val dec = "decimal(38,0)"
-      val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
-      val fe = Tables.lineitem(s, d)
-        .select(col("l_partkey").as("src"),
-          lead(col("l_partkey"), 1).over(w).as("dst"))
-        .where(col("dst").isNotNull && col("src") =!= col("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .where(col("w") >= 2)
-        .select(col("src"), col("dst"))
-      val ue = Housekeeping.cacheBounded("mod_ue",
-        fe.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b")).distinct())
-      val und = fe.union(fe.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+      val und = frequentUndirected(s, d)
+      // each undirected edge once, low end first: und holds both directions
+      // of every edge and no self-loop
+      val ue = und.where(col("src") < col("dst")).select(col("src").as("a"), col("dst").as("b"))
       val deg = und.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-      val labels = ccLabels(s, d, CcRounds)
+      val labels = components(und, CcRounds)._1
       val mRow = ue.agg(count(lit(1)).as("m"))
       val ec = ue.join(labels.withColumnRenamed("v", "a"), "a")
         .groupBy(col("lbl").as("component")).agg(count(lit(1)).as("e_c"))
@@ -697,46 +651,29 @@ object GraphOps {
           (col("qn").cast("double") / col("qd").cast("double")).as("q"))
       per.unionAll(total).orderBy(col("component").asc_nulls_last)
     },
-    Some {
-      val rounds = (1 to CcRounds).map { i =>
-        val prev = s"l${i - 1}"
-        s"nb$i AS (SELECT u.dst AS v, MIN(l.lbl) AS nb FROM und u " +
-          s"JOIN $prev l ON l.v = u.src GROUP BY 1), " +
-          s"h$i AS MATERIALIZED (SELECT l.v, LEAST(l.lbl, COALESCE(n.nb, l.lbl)) AS lbl " +
-          s"FROM $prev l LEFT JOIN nb$i n ON n.v = l.v), " +
-          s"l$i AS MATERIALIZED (SELECT h.v, LEAST(h.lbl, j.lbl) AS lbl " +
-          s"FROM h$i h JOIN h$i j ON j.v = h.lbl)"
-      }.mkString(", ")
-      "WITH e0 AS (SELECT l_partkey AS src, lead(l_partkey) OVER " +
-        "(PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS dst FROM lineitem), " +
-        "fe AS (SELECT src, dst FROM (SELECT src, dst, COUNT(*) AS w FROM e0 " +
-        "WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2) WHERE w >= 2), " +
-        "und AS MATERIALIZED (SELECT src, dst FROM fe UNION SELECT dst, src FROM fe), " +
-        "un AS (SELECT DISTINCT src AS v FROM und), " +
-        "l0 AS MATERIALIZED (SELECT v, v AS lbl FROM un), " + rounds + ", " +
-        "ue AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM fe), " +
-        "mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM ue), " +
-        "deg AS (SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS deg FROM und GROUP BY 1), " +
-        s"lab AS (SELECT v, lbl FROM l$CcRounds), " +
-        "ec AS (SELECT lab.lbl AS component, CAST(COUNT(*) AS BIGINT) AS e_c " +
-        "FROM ue JOIN lab ON lab.v = ue.a GROUP BY 1), " +
-        "per AS (SELECT lab.lbl AS component, CAST(COUNT(*) AS BIGINT) AS n_nodes, " +
-        "CAST(SUM(deg) AS BIGINT) AS d_c FROM lab JOIN deg USING (v) GROUP BY 1), " +
-        "rows_ AS (SELECT per.component, n_nodes, COALESCE(ec.e_c, 0) AS e_c, d_c " +
-        "FROM per LEFT JOIN ec USING (component)), " +
-        "tot AS (SELECT CAST(SUM(n_nodes) AS BIGINT) AS n_nodes, " +
-        "CAST(SUM(e_c) AS BIGINT) AS e_c, CAST(SUM(d_c) AS BIGINT) AS d_c, " +
-        "CAST(4 * mm.m * CAST(SUM(e_c) AS DECIMAL(38,0)) - " +
-        "SUM(CAST(d_c AS DECIMAL(38,0)) * d_c) AS DECIMAL(38,0)) AS qn, " +
-        "CAST(4 * CAST(mm.m AS DECIMAL(38,0)) * mm.m AS DECIMAL(38,0)) AS qd " +
-        "FROM rows_, mm GROUP BY mm.m) " +
-        "SELECT component, n_nodes, e_c, d_c, " +
-        "CAST(NULL AS VARCHAR) AS q_num, CAST(NULL AS VARCHAR) AS q_den, " +
-        "CAST(NULL AS DOUBLE) AS q FROM rows_ " +
-        "UNION ALL SELECT NULL, n_nodes, e_c, d_c, CAST(qn AS VARCHAR), " +
-        "CAST(qd AS VARCHAR), CAST(qn AS DOUBLE) / CAST(qd AS DOUBLE) FROM tot " +
-        "ORDER BY component NULLS LAST"
-    })
+    Some(s"WITH $ccCtes, " +
+      "ue AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM fe), " +
+      "mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM ue), " +
+      "deg AS (SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS deg FROM und GROUP BY 1), " +
+      s"lab AS (SELECT v, lbl FROM l$CcRounds), " +
+      "ec AS (SELECT lab.lbl AS component, CAST(COUNT(*) AS BIGINT) AS e_c " +
+      "FROM ue JOIN lab ON lab.v = ue.a GROUP BY 1), " +
+      "per AS (SELECT lab.lbl AS component, CAST(COUNT(*) AS BIGINT) AS n_nodes, " +
+      "CAST(SUM(deg) AS BIGINT) AS d_c FROM lab JOIN deg USING (v) GROUP BY 1), " +
+      "rows_ AS (SELECT per.component, n_nodes, COALESCE(ec.e_c, 0) AS e_c, d_c " +
+      "FROM per LEFT JOIN ec USING (component)), " +
+      "tot AS (SELECT CAST(SUM(n_nodes) AS BIGINT) AS n_nodes, " +
+      "CAST(SUM(e_c) AS BIGINT) AS e_c, CAST(SUM(d_c) AS BIGINT) AS d_c, " +
+      "CAST(4 * mm.m * CAST(SUM(e_c) AS DECIMAL(38,0)) - " +
+      "SUM(CAST(d_c AS DECIMAL(38,0)) * d_c) AS DECIMAL(38,0)) AS qn, " +
+      "CAST(4 * CAST(mm.m AS DECIMAL(38,0)) * mm.m AS DECIMAL(38,0)) AS qd " +
+      "FROM rows_, mm GROUP BY mm.m) " +
+      "SELECT component, n_nodes, e_c, d_c, " +
+      "CAST(NULL AS VARCHAR) AS q_num, CAST(NULL AS VARCHAR) AS q_den, " +
+      "CAST(NULL AS DOUBLE) AS q FROM rows_ " +
+      "UNION ALL SELECT NULL, n_nodes, e_c, d_c, CAST(qn AS VARCHAR), " +
+      "CAST(qd AS VARCHAR), CAST(qn AS DOUBLE) / CAST(qd AS DOUBLE) FROM tot " +
+      "ORDER BY component NULLS LAST"))
 
   val all: Seq[Op] = Seq(graphPagerank, graphDegreeHist, graphTriangleCount, graphBfsLevels,
     graphConnectedComponents, graphShortestPath, graphLabelPropagation, graphModularityScore)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 import java.nio.file.{Files, Path}
 import java.util.Comparator
@@ -136,6 +136,17 @@ object Housekeeping {
         s"$op: observed metrics did not arrive within $within (did the observed dataset run?)")
     }
     row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+  }
+
+  /** [[iterationBarrier]] that also aggregates `aggs` over the rows it
+    * materializes: the metrics ride the barrier's own job (an `observe`
+    * under the eager checkpoint), so a loop's stop rule costs no second pass
+    * over the round's state. Returns the truncated frame and the metrics by
+    * alias, read through [[observed]] naming `op`. */
+  def observedBarrier(df: DataFrame, op: String)(aggs: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val out = iterationBarrier(df.observe(obs, aggs.head, aggs.tail: _*))
+    (out, observed(obs, op))
   }
 
   /** cache() with one live generation per key. */

@@ -515,65 +515,25 @@ object LlmOps {
 
   /** The end of the near-dup pipeline: the KEEP decision. Near-dup pairs form
     * a graph; what a 100 TB dedup job actually emits is one survivor per
-    * connected component (keep the smallest doc_id, drop the rest). Min-label
-    * propagation to fixpoint: every node starts labeled with itself, each
-    * round takes the min of its own and its neighbors' labels — converges in
-    * diameter rounds to the component minimum, each round one equi-join +
-    * min-aggregate (the classic iterative-CC shape; at extreme graph sizes
-    * you'd switch to large-star/small-star to cut round count, same join
-    * primitives). The convergence check collects ONE number per round; near-dup
-    * components are shallow (dup groups, diameter ≤ a handful), so rounds stay
-    * single-digit at any corpus size. Oracle: DuckDB WITH RECURSIVE reaches
-    * the identical fixpoint (min over reachable labels = component min). */
-  /** Connected-components keep decision over an undirected (doc_a, doc_b)
-    * pair list — the core of dedup_cluster_keep, exposed for the planted
-    * transitive-chain fixture in ClusterKeepSpec.
-    *
-    * Each round's plan references the previous labels twice (join + union),
-    * so WITHOUT lineage truncation the logical tree doubles per round and
-    * Catalyst analysis goes exponential long before execution does (a path
-    * graph of diameter 9 already hangs planning). `localCheckpoint` — the
-    * standard iterative-algorithm pattern — materializes each round and cuts
-    * the lineage flat; on a cluster you would use reliable `checkpoint()` if
-    * executor loss mid-train matters. */
+    * connected component (keep the smallest doc_id, drop the rest). The
+    * components come from the graph family's kernel, [[GraphOps.components]]
+    * (hash-min + pointer jump: O(log diameter) rounds, each one equi-join +
+    * min-aggregate + jump join, its stop rule observed on the round's own
+    * barrier job). Exposed for the planted transitive-chain fixture in
+    * ClusterKeepSpec. Oracle: DuckDB WITH RECURSIVE reaches the identical
+    * fixpoint (min over reachable labels = component min). */
   def ccKeep(pr: DataFrame): DataFrame = {
-    val edges = Housekeeping.cacheBounded("cc_edges",
+    val und = Housekeeping.cacheBounded("cc_edges",
       pr.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pr.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .transform(Housekeeping.iterationBarrier)
-    // labels only ever DECREASE under min-propagation, so the label sum is
-    // strictly decreasing until fixpoint — convergence is one overflow-safe
-    // aggregate per round, not a join. (The one number collected per round.)
-    // sum over an EMPTY frame is SQL NULL — null-guard it or an empty pair
-    // list (no near-dups in the corpus) NPEs on the compareTo below.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)")).as("s")).first().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var cur = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < 64) {
-      iter += 1
-      val next = edges.join(labels.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), col("label"))
-        .union(labels)
-        .groupBy("node").agg(min("label").as("label"))
-        .transform(Housekeeping.iterationBarrier)
-      val ns = labelSum(next)
-      labels = next
-      converged = ns.compareTo(cur) == 0
-      cur = ns
-    }
+    val (labels, rounds, converged) = GraphOps.components(und, 64)
     // Silent truncation would emit labels that are NOT the component minima
     // (multiple "survivors" per component) and quietly diverge from the
-    // oracle's true fixpoint — refuse instead. 64 rounds covers any
-    // realistic near-dup component diameter; a corpus that exceeds it needs
-    // the large-star/small-star recurrence, not a bigger cap.
+    // oracle's true fixpoint — refuse instead. 64 rounds covers a component
+    // diameter far beyond any near-dup cluster.
     require(converged,
-      s"connected-components min-label propagation did not converge in $iter rounds")
-    labels.select(col("node").as("doc_id"), col("label").as("keep_id"))
+      s"connected-components labelling did not converge in $rounds rounds")
+    labels.select(col("v").as("doc_id"), col("lbl").as("keep_id"))
       .orderBy("doc_id")
   }
 
@@ -2608,7 +2568,7 @@ object LlmOps {
     * as the total tie-break), not the smallest id. Min-id keep silently
     * prefers whichever copy was ingested first — often the truncated or
     * boilerplate-wrapped one; quality-ranked keep preserves the fullest
-    * copy. Same CC kernel (min-label propagation over the [[ngramPairs]]
+    * copy. Same CC kernel ([[ccKeep]] over the [[ngramPairs]]
     * pair stage), then ONE argmax-by-struct aggregate per
     * component — `max(struct(quality, -doc_id))` is associative, so the
     * keeper decision merges map-side like any aggregate.

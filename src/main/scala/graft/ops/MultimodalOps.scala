@@ -543,9 +543,10 @@ object MultimodalOps {
 
   /** The keep-list half of image dedup — same composition the text side
     * ships as `dedup_cluster_keep`: near-dup pairs form a graph, connected
-    * components are computed by min-label propagation ([[LlmOps.ccKeep]]:
-    * one equi-join + map-side min per round, convergence checked by a
-    * strictly-decreasing label sum, refuses rather than truncating), and
+    * components come from [[LlmOps.ccKeep]] (the [[GraphOps.components]]
+    * kernel: hash-min + pointer jump per round, convergence observed as an
+    * unchanged label sum on each round's barrier job, refuses rather than
+    * truncating), and
     * each image maps to its component's minimum doc_id — the canonical copy
     * a curation pass keeps. Oracle: the same components via DuckDB's
     * recursive CTE over the staged signature pairs. */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.LlmOps
+import graft.ops.{GraphOps, LlmOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `dedup_cluster_keep`'s core: the keep decision must be per CONNECTED
@@ -38,10 +38,20 @@ class ClusterKeepSpec extends AnyFunSuite {
 
   test("long path converges (diameter > a couple of rounds)") {
     import spark.implicits._
-    // path 0-1-2-...-9: worst-case diameter for min propagation
-    val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = LlmOps.ccKeep(pairs).collect().map(r => (r.getLong(0), r.getLong(1)))
+    // paths 0-1-2-...-(n-1): worst-case diameter for min propagation. At
+    // n = 100, hash-min alone needs 99 rounds, past ccKeep's 64-round cap.
+    for (n <- Seq(10, 100)) {
+      val pairs = (0L until n - 1L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      val got = LlmOps.ccKeep(pairs).collect().map(r => (r.getLong(0), r.getLong(1)))
+      graft.ops.Housekeeping.releaseAll()
+      assert(got.forall(_._2 == 0L) && got.length == n, s"$n-node path")
+    }
+    // the pointer jump halves the remaining depth each round: the kernel
+    // settles the 100-node path in O(log diameter) rounds
+    val path = (0L until 99L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (_, rounds, converged) = GraphOps.components(path.union(path.select("dst", "src")), 64)
     graft.ops.Housekeeping.releaseAll()
-    assert(got.forall(_._2 == 0L) && got.length == 10)
+    val bound = math.ceil(math.log(100) / math.log(2)).toInt + 2
+    assert(converged && rounds <= bound, s"$rounds rounds (bound $bound), converged $converged")
   }
 }

@@ -206,8 +206,8 @@ class GraphSpec extends AnyFunSuite {
     // The bench path early-exits on the observed label-sum fixpoint; pin
     // that (a) the exit actually fires with headroom on real data and
     // (b) the observed-metric path returns exactly the fixed-round labels.
-    val (dfE, usedRounds) =
-      GraphOps.ccLabelsRounds(spark, TestSpark.sf001, GraphOps.CcRounds)
+    val (dfE, usedRounds, _) = GraphOps.components(
+      GraphOps.frequentUndirected(spark, TestSpark.sf001), GraphOps.CcRounds)
     val early = dfE.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(usedRounds < GraphOps.CcRounds,
       s"early exit never fired: used $usedRounds of ${GraphOps.CcRounds} rounds")
