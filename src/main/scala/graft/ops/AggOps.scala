@@ -274,13 +274,11 @@ object AggOps {
   val aggIncrementalRollup: Op = Op(
     "agg_incremental_rollup",
     (s, d) => {
-      import java.nio.file.Files
       val e = Tables.events(s, d).withColumn("day", to_date(col("ts")))
       // the newest day is "today", arriving as the delta (one collected
       // scalar — the boundary the job scheduler knows anyway)
       val split = e.agg(max(col("day"))).first().getDate(0)
-      val standingDir = Housekeeping.tempDirBounded("graft_rollup",
-        Files.createTempDirectory("graft_rollup")).toString
+      val standingDir = Housekeeping.boundedScratch("graft_rollup").toString
       rollupPartial(e, col("day") < lit(split))
         .write.mode("overwrite").parquet(standingDir)
       s.read.parquet(standingDir)
@@ -535,8 +533,7 @@ object AggOps {
       val c0 = c.where(col("c_custkey") % 7 =!= 0)
       val dC = c.where(col("c_custkey") % 7 === 0)
       // the standing MV: persisted once, read back — never recomputed
-      val mvDir = Housekeeping.tempDirBounded("mv_join_v0",
-        java.nio.file.Files.createTempDirectory("mv_join_v0")).toString
+      val mvDir = Housekeeping.boundedScratch("mv_join_v0").toString
       o0.join(c0, col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("price"), col("seg"))
         .write.mode("overwrite").parquet(mvDir)

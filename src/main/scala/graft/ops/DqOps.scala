@@ -185,8 +185,7 @@ object DqOps {
           sum((col("l_extendedprice").cast(D12_2) * 100).cast("bigint")).as("b_price_cents"),
           max(col("l_orderkey")).as("c_max_orderkey"),
           count(when(col("l_discount") > lit(0.05), 1)).as("d_n_high_discount"))
-      val out = Housekeeping.tempDirBounded("dq_obs",
-        java.nio.file.Files.createTempDirectory("dq_obs")).toString
+      val out = Housekeeping.boundedScratch("dq_obs").toString
       gated.write.mode("overwrite").parquet(out)
       val m = Housekeeping.observed(obs, "dq_observe_metrics")
       import s.implicits._

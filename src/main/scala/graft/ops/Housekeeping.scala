@@ -161,9 +161,12 @@ object Housekeeping {
 
   private val dirs = new ConcurrentHashMap[String, Path]()
 
-  /** Register a temp directory under a key; the key's previous directory is
-    * deleted recursively. */
-  def tempDirBounded(key: String, path: Path): Path = {
+  /** A fresh [[scratchDir]] registered under `key`: the key's previous
+    * directory is deleted recursively, so each key keeps one live
+    * generation. The one entry for a bounded scratch directory. */
+  def boundedScratch(key: String): Path = tempDirBounded(key, scratchDir(key))
+
+  private def tempDirBounded(key: String, path: Path): Path = {
     val prev = dirs.put(key, path)
     if (prev != null && prev != path) deleteRecursively(prev)
     path

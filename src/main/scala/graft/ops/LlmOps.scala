@@ -1119,12 +1119,10 @@ object LlmOps {
   val streamAnnIvfAppend: Op = Op(
     "stream_ann_ivf_append",
     (s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val batchIdx = ivfAppendIndexPath(s, d) // frozen centroids live here
       val cents = Housekeeping.cacheBounded("ivf_stream_cents",
         s.read.parquet(batchIdx.resolve("centroids").toString))
-      val root = Housekeeping.tempDirBounded("ivf_stream_idx",
-        Housekeeping.scratchDir("ivf_stream_idx"))
+      val root = Housekeeping.boundedScratch("ivf_stream_idx")
       val cellsDir = root.resolve("cells")
       // base index: the standing 4/5 corpus assigned against the frozen
       // centroids — BYTE-IDENTICAL to the build-once index store's gen1 by
@@ -1139,13 +1137,11 @@ object LlmOps {
       TableManifest.commit(cellsDir, 1,
         TableManifest.parquetFiles(cellsDir.resolve("gen0")))
       // the delta streams in: two deliveries of the id % 5 == 0 fifth
-      val srcDir = Housekeeping.scratchDir("ivf_stream_src")
-      val ckpt = Housekeeping.scratchDir("ivf_stream_ckpt").toString
       val delta = vecs.where(pmod(col("vec_id"), lit(5)) === 0)
-      try {
+      StreamingOps.streamDirs("ivf_stream") { (srcDir, ckpt) =>
         (0 to 1).foreach(k => StreamingOps.stageDelivery(
           delta.where(pmod(col("vec_id"), lit(2)) === k), srcDir, s"delivery$k.parquet"))
-        val q = s.readStream.schema(delta.schema)
+        StreamingOps.drain(s.readStream.schema(delta.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .writeStream
@@ -1169,15 +1165,11 @@ object LlmOps {
                 "a concurrent writer mutated the index mid-ingest")
             }
             ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }, ckpt)
         stageAndRank("ann_ivf_stream_cand",
           ivfManifestProbe(s, d, root, TableManifest.read(cellsDir)._1),
           annIvfStreamStagePath(d))
-      } finally Seq(srcDir.toString, ckpt).foreach(p =>
-        Housekeeping.deleteRecursively(java.nio.file.Paths.get(p)))
+      }
     },
     Some(annRerankOracle(Stage.token + "/ann_ivf_stream_cand")))
 
@@ -1248,12 +1240,10 @@ object LlmOps {
   val streamAnnIvfAutorefresh: Op = Op(
     "stream_ann_ivf_autorefresh",
     (s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val batchIdx = ivfAppendIndexPath(s, d) // frozen base centroids
       val floor = s.conf.getOption("graft.ivf.refresh.ppm")
         .map(_.toLong).getOrElse(100000L)
-      val root = Housekeeping.tempDirBounded("ivf_streamref_idx",
-        Housekeeping.scratchDir("ivf_streamref_idx"))
+      val root = Housekeeping.boundedScratch("ivf_streamref_idx")
       // seed the run-local mutable root from the build-once index store by
       // driver-side file copy (see streamAnnIvfAppend — identical content
       // by construction; the per-invocation base assignment job is the
@@ -1266,15 +1256,13 @@ object LlmOps {
       TableManifest.commit(root, 1,
         TableManifest.parquetFiles(root.resolve("centroids/gen0")) ++
           TableManifest.parquetFiles(root.resolve("cells/gen0")))
-      val srcDir = Housekeeping.scratchDir("ivf_streamref_src")
-      val ckpt = Housekeeping.scratchDir("ivf_streamref_ckpt").toString
       val delta = vecs.where(pmod(col("vec_id"), lit(5)) === 0)
-      try {
+      StreamingOps.streamDirs("ivf_streamref") { (srcDir, ckpt) =>
         StreamingOps.stageDelivery(delta.where(pmod(col("vec_id"), lit(3)) === 0),
           srcDir, "delivery0.parquet")
         StreamingOps.stageDelivery(delta.where(pmod(col("vec_id"), lit(3)) =!= 0),
           srcDir, "delivery1.parquet")
-        val q = s.readStream.schema(delta.schema)
+        StreamingOps.drain(s.readStream.schema(delta.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .writeStream
@@ -1331,15 +1319,11 @@ object LlmOps {
                 s"version $cur2 — a concurrent writer mutated the index mid-swap")
             } else streamRefreshLog.put(s"$d|b$batchId", s"noop:$ppm")
             ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }, ckpt)
         stageAndRank("ann_ivf_stream_refresh_cand",
           ivfSwapProbe(s, d, root, TableManifest.read(root)._1),
           annIvfStreamRefreshStagePath(d))
-      } finally Seq(srcDir.toString, ckpt).foreach(p =>
-        Housekeeping.deleteRecursively(java.nio.file.Paths.get(p)))
+      }
     },
     Some(annRerankOracle(Stage.token + "/ann_ivf_stream_refresh_cand")))
 

@@ -58,8 +58,7 @@ object PlanSurfaceOps {
   val scanAggPushdown: Op = Op(
     "scan_agg_pushdown",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("agg_pd",
-        Housekeeping.scratchDir("agg_pd")).toString
+      val out = Housekeeping.boundedScratch("agg_pd").toString
       withParquetAggPushdown(s) {
         aggScan(s, d).coalesce(1).write.mode("overwrite").parquet(out)
       }

@@ -124,8 +124,7 @@ object SourceSinkOps {
   val sinkPartitionedParquet: Op = Op(
     "sink_partitioned_parquet",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("graft_sink",
-        Housekeeping.scratchDir("graft_sink")).toString
+      val out = Housekeeping.boundedScratch("graft_sink").toString
       Tables.events(s, d)
         .withColumn("d", to_date(col("ts")))
         // one shuffle keyed by the partition column → one file per day dir
@@ -217,8 +216,7 @@ object SourceSinkOps {
   val sinkClusteredLayout: Op = Op(
     "sink_clustered_layout",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("graft_clustered",
-        Housekeeping.scratchDir("graft_clustered")).toString
+      val out = Housekeeping.boundedScratch("graft_clustered").toString
       writeClustered(s, d, out)
       s.read.parquet(out)
         .where(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01"))
@@ -268,8 +266,7 @@ object SourceSinkOps {
     "sink_csv_report",
     (s, d) => {
       import Dets._
-      val out = Housekeeping.tempDirBounded("graft_csv",
-        Housekeeping.scratchDir("graft_csv")).toString
+      val out = Housekeeping.boundedScratch("graft_csv").toString
       Tables.orders(s, d)
         .groupBy(date_trunc("month", col("o_orderdate")).as("mo"))
         .agg(dsum(col("o_totalprice")).as("revenue"), count(lit(1)).as("cnt"))
@@ -291,8 +288,7 @@ object SourceSinkOps {
     "source_jsonl_roundtrip",
     (s, d) => {
       import Dets._
-      val out = Housekeeping.tempDirBounded("graft_jsonl",
-        Housekeeping.scratchDir("graft_jsonl")).toString
+      val out = Housekeeping.boundedScratch("graft_jsonl").toString
       Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         // default JSON timestamp format truncates to milliseconds — pin µs
@@ -315,8 +311,7 @@ object SourceSinkOps {
     "source_orc_roundtrip",
     (s, d) => {
       import Dets._
-      val out = Housekeeping.tempDirBounded("graft_orc",
-        Housekeeping.scratchDir("graft_orc")).toString
+      val out = Housekeeping.boundedScratch("graft_orc").toString
       Tables.lineitem(s, d)
         .write.mode("overwrite").orc(out)
       s.read.orc(out)
@@ -438,8 +433,7 @@ object SourceSinkOps {
   val sinkCompactSmallFiles: Op = Op(
     "sink_compact_small_files",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("graft_compact",
-        Housekeeping.scratchDir("graft_compact"))
+      val out = Housekeeping.boundedScratch("graft_compact")
       val frag = out.resolve("fragmented").toString
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
@@ -510,8 +504,7 @@ object SourceSinkOps {
   val sinkZorderLayout: Op = Op(
     "sink_zorder_layout",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("graft_zorder",
-        Housekeeping.scratchDir("graft_zorder")).toString
+      val out = Housekeeping.boundedScratch("graft_zorder").toString
       val (pkMax, skMax) = writeZorder(s, d, out)
       s.read.parquet(out)
         .where(col("l_partkey") <= lit(pkMax / 10) && col("l_suppkey") <= lit(skMax / 10))
@@ -579,8 +572,7 @@ object SourceSinkOps {
   val sinkTargetedDelete: Op = Op(
     "sink_targeted_delete",
     (s, d) => {
-      val root = Housekeeping.tempDirBounded("graft_delete",
-        Housekeeping.scratchDir("graft_delete"))
+      val root = Housekeeping.boundedScratch("graft_delete")
       val standing = root.resolve("standing").toString
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag")
@@ -619,8 +611,7 @@ object SourceSinkOps {
   val sinkTimeTravelRead: Op = Op(
     "sink_time_travel_read",
     (s, d) => {
-      val root = Housekeeping.tempDirBounded("graft_tt",
-        Housekeeping.scratchDir("graft_tt"))
+      val root = Housekeeping.boundedScratch("graft_tt")
       val standing = root.resolve("standing").toString
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -666,8 +657,7 @@ object SourceSinkOps {
   val sinkVacuumRetention: Op = Op(
     "sink_vacuum_retention",
     (s, d) => {
-      val root = Housekeeping.tempDirBounded("graft_vacuum",
-        Housekeeping.scratchDir("graft_vacuum"))
+      val root = Housekeeping.boundedScratch("graft_vacuum")
       val standing = root.resolve("standing").toString
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -706,8 +696,7 @@ object SourceSinkOps {
   val sinkDynamicPartitionOverwrite: Op = Op(
     "sink_dynamic_partition_overwrite",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("graft_dynpo",
-        Housekeeping.scratchDir("graft_dynpo")).toString
+      val out = Housekeeping.boundedScratch("graft_dynpo").toString
       val orders = Tables.orders(s, d)
         .select(substring(col("o_orderpriority"), 1, 1).as("prio"),
           col("o_orderkey"), col("o_totalprice"))
@@ -1241,8 +1230,7 @@ object SourceSinkOps {
   val scanStatsPrune: Op = Op(
     "scan_stats_prune",
     (s, d) => {
-      val root = Housekeeping.tempDirBounded("graft_statsprune",
-        Housekeeping.scratchDir("graft_statsprune"))
+      val root = Housekeeping.boundedScratch("graft_statsprune")
       val mx = writeStatsPruned(s, d, root)
       val (lo, hi) = (mx / 3, mx / 2)
       val files = TableManifest.filesForRange(root, lo, hi)

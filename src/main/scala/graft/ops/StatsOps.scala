@@ -5,8 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import java.nio.file.Files
-
 /** Table/column statistics collection — the ANALYZE-equivalent that feeds
   * cost-based planning. SURVEY §4.2's `CostBasedJoinReorder` (and Spark's
   * stats-informed broadcast decision) only fire when per-table rowCount and
@@ -59,8 +57,7 @@ object StatsOps {
   val statsCollect: Op = Op(
     "stats_collect",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("graft_stats",
-        Files.createTempDirectory("graft_stats")).toString
+      val out = Housekeeping.boundedScratch("graft_stats").toString
       statCols.map { case (t, cols) => tableStats(s, d, t, cols) }
         .reduce(_.unionAll(_))
         .coalesce(1).write.mode("overwrite").parquet(out)

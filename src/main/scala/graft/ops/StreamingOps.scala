@@ -1,14 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import Dets._
 
-import java.nio.file.Files
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
 
 /** SURVEY.md §2 category J — Structured Streaming restatement of the
   * reference's ingest reality (late, duplicated gateway uploads).
@@ -19,6 +17,14 @@ import scala.jdk.CollectionConverters._
   * applies unchanged. On closed input the streaming result must equal the
   * batch equivalent — that equivalence IS the oracle.
   *
+  * The contract has one definition per rule: [[streamDirs]] scopes the
+  * staged source and checkpoint dirs, [[eventsFrom]] reads staged events,
+  * [[drain]] runs the query to completion (the one site for a per-batch
+  * lever), and [[appendTo]]/[[finalRegister]] are the foreachBatch sink
+  * pair. The three capstone folds share one fold kit:
+  * [[TableManifest.snapshotAt]] (the pinned prior state), [[pruned]],
+  * [[dropSeen]] and [[oncePerBatch]].
+  *
   * Scale notes: the same programs run unmodified as continuous micro-batch
   * jobs on a cluster — state lives in the checkpointed state store (RocksDB
   * at scale), watermarks bound state growth, and aggregations are the same
@@ -28,11 +34,8 @@ import scala.jdk.CollectionConverters._
 object StreamingOps {
 
   /** The streaming file source requires a *directory* (it tails new files) —
-    * stage the closed events file into a per-run temp dir. On a cluster this
-    * is the landing directory gateways upload into. The ns shim (schema +
-    * rebuild) is shared with the batch loader — one definition in
-    * [[graft.tables.Tables]]. Staged source and checkpoint dirs are disposed
-    * after the drained query terminates (cleanupAfter).
+    * stage the closed events file into the per-run source dir. On a cluster
+    * this is the landing directory gateways upload into.
     *
     * Staging contract: exactly ONE file is staged and no maxFilesPerTrigger
     * is set, so a drained run processes the whole input in a single
@@ -42,17 +45,57 @@ object StreamingOps {
     * dropped/evicted and the drained result would diverge from the batch
     * SQL. If staging ever becomes multi-file, files must be ordered so event
     * time is monotone non-decreasing across batches. */
-  private def eventStream(s: SparkSession, d: String): (DataFrame, java.nio.file.Path) = {
-    val srcDir = Housekeeping.scratchDir("st_src")
-    Files.copy(java.nio.file.Paths.get(s"$d/events.parquet"),
-      srcDir.resolve("events.parquet"))
-    val df = s.readStream.schema(graft.tables.Tables.rawEventsSchema).parquet(srcDir.toString)
-      .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
-    (df, srcDir)
+  private def eventStream(s: SparkSession, d: String, srcDir: Path): DataFrame = {
+    Files.copy(Paths.get(s"$d/events.parquet"), srcDir.resolve("events.parquet"))
+    eventsFrom(s, srcDir)
   }
 
-  private def tmp(prefix: String): String =
-    Housekeeping.scratchDir(prefix).toString
+  /** Staged events as a stream: the raw schema plus the NTZ→LTZ `ts` shim
+    * shared with the batch loader ([[graft.tables.Tables]]). */
+  private def eventsFrom(s: SparkSession, dir: Path): DataFrame =
+    s.readStream.schema(graft.tables.Tables.rawEventsSchema).parquet(dir.toString)
+      .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
+
+  /** Scope of one drained query's disposable dirs: `<name>_src` (the staged
+    * source) and `<name>_ckpt` (the checkpoint) under the scratch root,
+    * both deleted after `body`, also when it throws. Results live
+    * elsewhere (a bounded sink dir or a memory-sink view). */
+  private[graft] def streamDirs[A](name: String)(body: (Path, String) => A): A = {
+    val src = Housekeeping.scratchDir(s"${name}_src")
+    val ckpt = Housekeeping.scratchDir(s"${name}_ckpt")
+    try body(src, ckpt.toString)
+    finally Seq(src, ckpt).foreach(Housekeeping.deleteRecursively)
+  }
+
+  /** Run `w` to completion: checkpoint at `ckpt`, Trigger.AvailableNow,
+    * start, await. Returns the terminated query (its `recentProgress`
+    * stays readable). Every drained query in the engine goes through here,
+    * so a per-batch lever is a one-site change. */
+  private[graft] def drain(w: DataStreamWriter[_], ckpt: String): StreamingQuery = {
+    val q = w.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** The foreachBatch sink of the update-mode keys: each micro-batch
+    * appends its rows as parquet files under `out`, so sink volume lives on
+    * disk, not in driver memory. */
+  private def appendTo(out: String): (DataFrame, Long) => Unit =
+    (batch, _) => batch.write.mode("append").parquet(out)
+
+  /** The per-user register's final row across micro-batch re-emissions:
+    * the row with the final cnt (max_by), never independent maxes (a later
+    * batch can lower the running sum if values go negative). */
+  private def finalRegister(s: SparkSession, out: String): DataFrame =
+    s.read.parquet(out).groupBy("user_id")
+      .agg(max(col("cnt")).as("cnt"), max_by(col("sum_value"), col("cnt")).as("sum_value"))
+      .orderBy("user_id")
+
+  /** Exact integer midpoint of an epoch-micros column: one bounds job. */
+  private def midpointMicros(df: DataFrame, usCol: Column): Long = {
+    val b = df.agg(min(usCol), max(usCol)).first()
+    b.getLong(0) / 2 + b.getLong(1) / 2
+  }
 
   /** Streaming state-store partition sizing. A stateful query creates one
     * state store (with per-micro-batch checkpoint files + fsyncs) per shuffle
@@ -66,12 +109,6 @@ object StreamingOps {
   private[graft] def withStatePartitions[A](s: SparkSession)(body: => A): A =
     Housekeeping.withShufflePartitions(s, 8)(body)
 
-  /** Run a drained streaming query, then delete the dirs it no longer
-    * needs (staged source + checkpoint — the results live elsewhere). */
-  private def cleanupAfter[A](dirs: Seq[String])(run: => A): A =
-    try run
-    finally dirs.foreach(dir => Housekeeping.deleteRecursively(java.nio.file.Paths.get(dir)))
-
   /** Streaming hourly rollup with a 10-minute watermark, complete-mode
     * memory sink (emits every window at drain — equals batch on closed
     * input; append mode would hold back windows newer than the final
@@ -81,18 +118,13 @@ object StreamingOps {
     (s, d) => {
       val qn = s"st_tumble_${System.nanoTime()}"
       Housekeeping.tempViewBounded("st_tumble", s, qn)
-      val (src, srcDir) = eventStream(s, d)
-      val ckpt = tmp("ckpt_tumble")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
-        val q = src
+      streamDirs("st_tumble") { (srcDir, ckpt) => withStatePartitions(s) {
+        drain(eventStream(s, d, srcDir)
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
           .select(col("window.start").as("h"), col("cnt"), col("sum_value"))
-          .writeStream.format("memory").queryName(qn).outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.format("memory").queryName(qn).outputMode("complete"), ckpt)
         s.table(qn).orderBy("h")
       } }
     },
@@ -105,18 +137,12 @@ object StreamingOps {
   val streamDedup: Op = Op(
     "stream_dedup",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("st_dedup_out",
-        Housekeeping.scratchDir("st_dedup_out")).toString
-      val (src, srcDir) = eventStream(s, d)
-      val ckpt = tmp("st_dedup_ckpt")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
-        val q = src
+      val out = Housekeeping.boundedScratch("st_dedup_out").toString
+      streamDirs("st_dedup") { (srcDir, ckpt) => withStatePartitions(s) {
+        drain(eventStream(s, d, srcDir)
           .withWatermark("ts", "10 minutes")
           .dropDuplicates("event_id")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.format("parquet").option("path", out).outputMode("append"), ckpt)
         s.read.parquet(out)
           .select("event_id", "user_id", "event_type", "value")
           .orderBy("event_id")
@@ -131,19 +157,14 @@ object StreamingOps {
     (s, d) => {
       val qn = s"st_sess_${System.nanoTime()}"
       Housekeeping.tempViewBounded("st_sess", s, qn)
-      val (src, srcDir) = eventStream(s, d)
-      val ckpt = tmp("ckpt_sess")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
-        val q = src
+      streamDirs("st_sess") { (srcDir, ckpt) => withStatePartitions(s) {
+        drain(eventStream(s, d, srcDir)
           .withWatermark("ts", "10 minutes")
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
           .agg(count(lit(1)).as("cnt"))
           .select(col("user_id"), col("session_window.start").as("session_start"),
             col("session_window.end").as("session_end"), col("cnt"))
-          .writeStream.format("memory").queryName(qn).outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.format("memory").queryName(qn).outputMode("complete"), ckpt)
         s.table(qn).orderBy("user_id", "session_start")
       } }
     },
@@ -194,12 +215,9 @@ object StreamingOps {
   val streamLateData: Op = Op(
     "stream_late_data",
     (s, d) => {
-      val srcDir = Housekeeping.scratchDir("st_late_src")
-      val out = Housekeeping.tempDirBounded("st_late_out",
-        Housekeeping.scratchDir("st_late_out")).toString
-      val ckpt = tmp("ckpt_late")
+      val out = Housekeeping.boundedScratch("st_late_out").toString
       val ev = graft.tables.Tables.events(s, d).select("event_id", "ts")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      streamDirs("st_late") { (srcDir, ckpt) => withStatePartitions(s) {
         (0 to 2).foreach { k =>
           stageDelivery(ev.where(pmod(col("event_id"), lit(3)) === k),
             srcDir, s"delivery$k.parquet")
@@ -219,19 +237,14 @@ object StreamingOps {
             s"spark.sql.files.maxPartitionBytes=$maxPB — the one-input-partition-" +
             "per-batch precondition of the drop accounting no longer holds")
         }
-        val q = s.readStream.schema(ev.schema)
+        val q = drain(s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "10 minutes"))
           .agg(count(lit(1)).as("cnt"))
           .select(col("window.start").as("ws"), col("cnt"))
-          .writeStream.outputMode("update")
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out))
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.outputMode("update").foreachBatch(appendTo(out)), ckpt)
         val dropped = q.recentProgress
           .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
         s.read.parquet(out)
@@ -277,33 +290,24 @@ object StreamingOps {
   val streamJoinFollows: Op = Op(
     "stream_join_follows",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("st_join_out",
-        Housekeeping.scratchDir("st_join_out")).toString
-      // each side of a stream-stream join is its own stream with its own
-      // watermark; they can tail the SAME staged landing directory (two
-      // independent file-source readers — exactly the production layout
-      // where both sides subscribe to one upload directory)
-      val (srcP, dirP) = eventStream(s, d)
-      val srcF = s.readStream.schema(graft.tables.Tables.rawEventsSchema)
-        .parquet(dirP.toString)
-        .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
-      val ckpt = tmp("ckpt_join")
-      withStatePartitions(s) { cleanupAfter(Seq(dirP.toString, ckpt)) {
-        val purchases = srcP.where(col("event_type") === "purchase")
+      val out = Housekeeping.boundedScratch("st_join_out").toString
+      streamDirs("st_join") { (srcDir, ckpt) => withStatePartitions(s) {
+        // each side of a stream-stream join is its own stream with its own
+        // watermark; they can tail the SAME staged landing directory (two
+        // independent file-source readers — exactly the production layout
+        // where both sides subscribe to one upload directory)
+        val purchases = eventStream(s, d, srcDir).where(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"), col("user_id").as("u1"), col("ts").as("t1"))
           .withWatermark("t1", "10 minutes")
-        val follows = srcF
+        val follows = eventsFrom(s, srcDir)
           .select(col("event_id").as("follow_id"), col("user_id").as("u2"),
             col("ts").as("t2"), col("event_type").as("follow_type"))
           .withWatermark("t2", "10 minutes")
-        val q = purchases.join(follows,
+        drain(purchases.join(follows,
             col("u1") === col("u2") &&
               col("t2") > col("t1") && col("t2") <= col("t1") + expr("INTERVAL 10 MINUTES"))
           .select("purchase_id", "follow_id", "follow_type")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.format("parquet").option("path", out).outputMode("append"), ckpt)
         s.read.parquet(out).orderBy("purchase_id", "follow_id")
       } }
     },
@@ -325,20 +329,15 @@ object StreamingOps {
     (s, d) => {
       val qn = s"st_enrich_${System.nanoTime()}"
       Housekeeping.tempViewBounded("st_enrich", s, qn)
-      val (src, srcDir) = eventStream(s, d)
       val dim = graft.tables.Tables.customer(s, d)
         .select(col("c_custkey").as("circuit_id"), col("c_nationkey").as("nation"))
-      val ckpt = tmp("ckpt_enrich")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
-        val q = src
+      streamDirs("st_enrich") { (srcDir, ckpt) => withStatePartitions(s) {
+        drain(eventStream(s, d, srcDir)
           .withWatermark("ts", "10 minutes")
           .join(broadcast(dim), col("user_id") === col("circuit_id"))
           .groupBy(col("nation"))
           .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
-          .writeStream.format("memory").queryName(qn).outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.format("memory").queryName(qn).outputMode("complete"), ckpt)
         s.table(qn).orderBy("nation")
       } }
     },
@@ -369,39 +368,26 @@ object StreamingOps {
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
       implicit val rowEnc: Encoder[(Long, Double)] =
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-      val out = Housekeeping.tempDirBounded("st_state_out",
-        Housekeeping.scratchDir("st_state_out")).toString
-      val (src, srcDir) = eventStream(s, d)
-      val ckpt = tmp("ckpt_state")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
-      val q = src
-        .select(col("user_id"), col("value")).as[(Long, Double)](rowEnc)
-        .groupByKey(_._1)(Encoders.scalaLong)
-        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (uid: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, java.math.BigDecimal)]) =>
-            var (cnt, sum) = state.getOption.getOrElse((0L, java.math.BigDecimal.ZERO))
-            rows.foreach { case (_, v) =>
-              cnt += 1
-              sum = sum.add(java.math.BigDecimal.valueOf(v)
-                .setScale(2, java.math.RoundingMode.HALF_UP))
-            }
-            state.update((cnt, sum))
-            Iterator((uid, cnt, sum.doubleValue()))
-        }
-        .toDF("user_id", "cnt", "sum_value")
-        .writeStream.outputMode("update")
-        .foreachBatch((batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // multiple micro-batches emit one running (cnt, sum) per user per
-      // batch — keep the row with the final cnt (max_by), never independent
-      // maxes (a later batch can lower the running sum if values go negative)
-      s.read.parquet(out).groupBy("user_id")
-        .agg(max(col("cnt")).as("cnt"),
-          max_by(col("sum_value"), col("cnt")).as("sum_value"))
-        .orderBy("user_id")
+      val out = Housekeeping.boundedScratch("st_state_out").toString
+      streamDirs("st_state") { (srcDir, ckpt) => withStatePartitions(s) {
+        drain(eventStream(s, d, srcDir)
+          .select(col("user_id"), col("value")).as[(Long, Double)](rowEnc)
+          .groupByKey(_._1)(Encoders.scalaLong)
+          .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+            (uid: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, java.math.BigDecimal)]) =>
+              var (cnt, sum) = state.getOption.getOrElse((0L, java.math.BigDecimal.ZERO))
+              rows.foreach { case (_, v) =>
+                cnt += 1
+                sum = sum.add(java.math.BigDecimal.valueOf(v)
+                  .setScale(2, java.math.RoundingMode.HALF_UP))
+              }
+              state.update((cnt, sum))
+              Iterator((uid, cnt, sum.doubleValue()))
+          }
+          .toDF("user_id", "cnt", "sum_value")
+          .writeStream.outputMode("update").foreachBatch(appendTo(out)), ckpt)
+        // multiple micro-batches emit one running (cnt, sum) per user per batch
+        finalRegister(s, out)
       } }
     },
     Some("SELECT user_id, COUNT(*) AS cnt, " + oSum("value") + " AS sum_value " +
@@ -452,31 +438,19 @@ object StreamingOps {
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
       implicit val rowEnc: Encoder[(Long, Double)] =
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-      val out = Housekeeping.tempDirBounded("st_tws_out",
-        Housekeeping.scratchDir("st_tws_out")).toString
-      val (src, srcDir) = eventStream(s, d)
-      val ckpt = tmp("ckpt_tws")
+      val out = Housekeeping.boundedScratch("st_tws_out").toString
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
+      streamDirs("st_tws") { (srcDir, ckpt) =>
       Housekeeping.withSessionConf(s, providerKey ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
-        val q = src
+      withStatePartitions(s) {
+        drain(eventStream(s, d, srcDir)
           .select(col("user_id"), col("value")).as[(Long, Double)](rowEnc)
           .groupByKey(_._1)(Encoders.scalaLong)
           .transformWithState(new CounterProcessor, TimeMode.None(), OutputMode.Update())
           .toDF("user_id", "cnt", "sum_value")
-          .writeStream.outputMode("update")
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out))
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // same final-row selection as stream_stateful_counter: keep the row
-        // with the final cnt per user across micro-batch re-emissions
-        s.read.parquet(out).groupBy("user_id")
-          .agg(max(col("cnt")).as("cnt"),
-            max_by(col("sum_value"), col("cnt")).as("sum_value"))
-          .orderBy("user_id")
+          .writeStream.outputMode("update").foreachBatch(appendTo(out)), ckpt)
+        finalRegister(s, out)
       } } }
     },
     Some("SELECT user_id, COUNT(*) AS cnt, " + oSum("value") + " AS sum_value " +
@@ -486,7 +460,7 @@ object StreamingOps {
     * `name` (the file source tails the dir; a Spark write's part-file is
     * moved in so each staged delivery is exactly one file = one micro-batch
     * under AvailableNow). Exposed for StreamRestartSpec. */
-  def stageDelivery(df: DataFrame, srcDir: java.nio.file.Path, name: String): Unit = {
+  def stageDelivery(df: DataFrame, srcDir: Path, name: String): Unit = {
     val tmpD = Housekeeping.scratchDir("st_stage")
     df.coalesce(1).write.mode("overwrite").parquet(tmpD.toString)
     val part = {
@@ -523,7 +497,7 @@ object StreamingOps {
     * no-ops). Planted duplicate pairs (adjacent ids) straddle mod-n
     * deliveries for every n >= 2, so the cross-batch path always carries
     * real matches. */
-  private def stageModDeliveries(docs: DataFrame, srcDir: java.nio.file.Path, n: Int): Unit =
+  private def stageModDeliveries(docs: DataFrame, srcDir: Path, n: Int): Unit =
     (0 until n).foreach { k =>
       val own = docs.where(pmod(col("doc_id"), lit(n)) === k)
       val reupload =
@@ -554,36 +528,27 @@ object StreamingOps {
   val streamRestartExactlyOnce: Op = Op(
     "stream_restart_exactly_once",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("st_restart_out",
-        Housekeeping.scratchDir("st_restart_out")).toString
-      val srcDir = Housekeeping.scratchDir("st_restart_src")
-      val ckpt = tmp("st_restart_ckpt")
+      val out = Housekeeping.boundedScratch("st_restart_out").toString
       // split point computed on epoch-micros longs (exact integer midpoint;
       // the NTZ→LTZ cast is value-identical under the pinned UTC session)
       val raw = graft.tables.Tables.rawEvents(s, d)
         .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
-      val bounds = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
-      val cut = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
+      val cut = midpointMicros(raw, col("ts_us"))
       val d1 = raw.where(col("ts_us") <= cut).drop("ts_us")
       // re-upload slice: every 10th event of delivery 1, resent in delivery 2
       val d2 = raw.where(col("ts_us") > cut).drop("ts_us")
         .unionAll(d1.where(col("event_id") % 10 === 0))
-      def drain(): Unit = withStatePartitions(s) {
-        val q = s.readStream.schema(graft.tables.Tables.rawEventsSchema)
-          .parquet(srcDir.toString)
-          .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
-          .withWatermark("ts", "30 days")
-          .dropDuplicates("event_id")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      streamDirs("st_restart") { (srcDir, ckpt) =>
+        def run(): Unit = withStatePartitions(s) {
+          drain(eventsFrom(s, srcDir)
+            .withWatermark("ts", "30 days")
+            .dropDuplicates("event_id")
+            .writeStream.format("parquet").option("path", out).outputMode("append"), ckpt)
+        }
         stageDelivery(d1, srcDir, "delivery1.parquet")
-        drain() // run 1: processes delivery 1, commits, stops
+        run() // run 1: processes delivery 1, commits, stops
         stageDelivery(d2, srcDir, "delivery2.parquet")
-        drain() // restart: recovers offsets + dedup state from the checkpoint
+        run() // restart: recovers offsets + dedup state from the checkpoint
         s.read.parquet(out)
           .select("event_id", "user_id", "event_type", "value")
           .orderBy("event_id")
@@ -612,32 +577,23 @@ object StreamingOps {
     * full-table rewrite for the `sink_targeted_delete` file-level surgery
     * plus manifest commit (both shipped), keeping the rewrite ∝ touched
     * files. */
-  /** Batch count of the last `stream_upsert_foreachbatch` run — exposed so
-    * the spec can assert the run was genuinely multi-batch incremental
-    * (maxFilesPerTrigger=1 over two staged deliveries ⇒ ≥ 2 versions). */
-  @volatile var lastUpsertVersions: Int = 0
-
   val streamUpsertForeachbatch: Op = Op(
     "stream_upsert_foreachbatch",
     (s, d) => {
-      val outRoot = Housekeeping.tempDirBounded("st_upsert_out",
-        Housekeeping.scratchDir("st_upsert_out")).toString
-      val srcDir = Housekeeping.scratchDir("st_upsert_src")
-      val ckpt = tmp("st_upsert_ckpt")
+      val outRoot = Housekeeping.boundedScratch("st_upsert_out").toString
       val raw = graft.tables.Tables.rawEvents(s, d)
         .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
-      val bounds = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
-      val cut = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
+      val cut = midpointMicros(raw, col("ts_us"))
       val ver = new java.util.concurrent.atomic.AtomicInteger(0)
       def latest(df: DataFrame): DataFrame = df
         .groupBy("user_id")
         .agg(max(struct(col("ts_us"), col("event_id"), col("value"))).as("m"))
         .select(col("user_id"), col("m.ts_us").as("ts_us"),
           col("m.event_id").as("event_id"), col("m.value").as("value"))
-      cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      streamDirs("st_upsert") { (srcDir, ckpt) =>
         stageDelivery(raw.where(col("ts_us") <= cut).drop("ts_us"), srcDir, "delivery1.parquet")
         stageDelivery(raw.where(col("ts_us") > cut).drop("ts_us"), srcDir, "delivery2.parquet")
-        val q = s.readStream.schema(graft.tables.Tables.rawEventsSchema)
+        drain(s.readStream.schema(graft.tables.Tables.rawEventsSchema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
@@ -651,11 +607,10 @@ object StreamingOps {
               .write.mode("overwrite").parquet(s"$outRoot/v${v + 1}")
             ver.incrementAndGet()
             ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        lastUpsertVersions = ver.get()
+          }, ckpt)
+        // the spec reads the version count: a genuinely multi-batch run
+        // (maxFilesPerTrigger=1 over two staged deliveries ⇒ ≥ 2 versions)
+        recordRoot("upsert_versions", d, ver.get().toString)
         s.read.parquet(s"$outRoot/v${ver.get()}")
           .select(col("user_id"), col("event_id"), col("value"))
           .orderBy("user_id")
@@ -688,31 +643,23 @@ object StreamingOps {
       val raw = graft.tables.Tables.events(s, d)
       // deterministic day-boundary split: midpoint of the event-time span,
       // floored to a UTC day (two bounded scalars)
-      val bounds = raw.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).first()
       val cutDay = java.time.Instant.ofEpochSecond(
-          (bounds.getLong(0) / 2 + bounds.getLong(1) / 2) / 1000000L)
+          midpointMicros(raw, unix_micros(col("ts"))) / 1000000L)
         .atZone(java.time.ZoneOffset.UTC).toLocalDate
       val batchHalf = raw.where(to_date(col("ts")) < lit(cutDay))
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
-      val srcDir = Housekeeping.scratchDir("st_backfill_src")
-      val ckpt = tmp("st_backfill_ckpt")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      streamDirs("st_backfill") { (srcDir, ckpt) => withStatePartitions(s) {
         stageDelivery(raw.where(to_date(col("ts")) >= lit(cutDay))
           .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"),
             col("user_id"), col("event_type"), col("value"), col("props")),
           srcDir, "tail.parquet")
-        val q = s.readStream.schema(graft.tables.Tables.rawEventsSchema)
-          .parquet(srcDir.toString)
-          .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
+        drain(eventsFrom(s, srcDir)
           .withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 day"))
           .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
           .select(col("window.start").cast("date").as("day"), col("cnt"), col("sum_value"))
-          .writeStream.format("memory").queryName(qn).outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.format("memory").queryName(qn).outputMode("complete"), ckpt)
         batchHalf.unionAll(s.table(qn)).orderBy("day")
       } }
     },
@@ -726,7 +673,7 @@ object StreamingOps {
     * live manifest — and skipped before any write. This check-then-publish
     * is exactly how Delta's `txn`/streaming-sink versioning turns
     * at-least-once delivery into an exactly-once table. */
-  private[graft] def publishBatch(root: java.nio.file.Path, batchId: Long,
+  private[graft] def publishBatch(root: Path, batchId: Long,
       batch: DataFrame): Unit = {
     val gen = root.resolve(s"gen$batchId")
     val already = Files.exists(root.resolve(TableManifest.fileName)) &&
@@ -739,7 +686,7 @@ object StreamingOps {
         val (cur, live) =
           if (Files.exists(root.resolve(TableManifest.fileName)))
             TableManifest.read(root)
-          else (0L, Seq.empty[java.nio.file.Path])
+          else (0L, Seq.empty[Path])
         committed = TableManifest.commitIfVersion(root, cur, live ++ newFiles)
       }
     }
@@ -767,28 +714,21 @@ object StreamingOps {
   val streamCommitManifest: Op = Op(
     "stream_commit_manifest",
     (s, d) => {
-      val root = java.nio.file.Paths.get(Housekeeping.tempDirBounded("st_manifest",
-        Housekeeping.scratchDir("st_manifest")).toString)
-      val srcDir = Housekeeping.scratchDir("st_manifest_src")
-      val ckpt = tmp("st_manifest_ckpt")
+      val root = Housekeeping.boundedScratch("st_manifest")
       val raw = graft.tables.Tables.rawEvents(s, d)
         .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
-      val bounds = raw.agg(min(col("ts_us")), max(col("ts_us"))).first()
-      val cut = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
-      cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      val cut = midpointMicros(raw, col("ts_us"))
+      streamDirs("st_manifest") { (srcDir, ckpt) =>
         stageDelivery(raw.where(col("ts_us") <= cut).drop("ts_us"), srcDir, "delivery1.parquet")
         stageDelivery(raw.where(col("ts_us") > cut).drop("ts_us"), srcDir, "delivery2.parquet")
-        val q = s.readStream.schema(graft.tables.Tables.rawEventsSchema)
+        drain(s.readStream.schema(graft.tables.Tables.rawEventsSchema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .select(col("ts"), col("user_id"), col("value"))
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             publishBatch(root, batchId, batch)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }, ckpt)
         // No mutable test hooks: the result reads THROUGH the manifest, so a
         // spec can recover the table root from the rollup's own inputFiles
         // (root/gen<batchId>/part-*.parquet) and read the manifest directly.
@@ -827,30 +767,21 @@ object StreamingOps {
   val streamJoinLeftOuter: Op = Op(
     "stream_join_left_outer",
     (s, d) => {
-      val out = Housekeeping.tempDirBounded("st_ljoin_out",
-        Housekeeping.scratchDir("st_ljoin_out")).toString
-      val (srcP, dirP) = eventStream(s, d)
-      val srcF = s.readStream.schema(graft.tables.Tables.rawEventsSchema)
-        .parquet(dirP.toString)
-        .withColumn("ts", graft.tables.Tables.ntzColToTimestamp("ts"))
-      val ckpt = tmp("ckpt_ljoin")
-      withStatePartitions(s) { cleanupAfter(Seq(dirP.toString, ckpt)) {
-        val purchases = srcP.where(col("event_type") === "purchase")
+      val out = Housekeeping.boundedScratch("st_ljoin_out").toString
+      streamDirs("st_ljoin") { (srcDir, ckpt) => withStatePartitions(s) {
+        val purchases = eventStream(s, d, srcDir).where(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"), col("user_id").as("u1"), col("ts").as("t1"))
           .withWatermark("t1", "10 minutes")
-        val follows = srcF
+        val follows = eventsFrom(s, srcDir)
           .select(col("event_id").as("follow_id"), col("user_id").as("u2"),
             col("ts").as("t2"), col("event_type").as("follow_type"))
           .withWatermark("t2", "10 minutes")
-        val q = purchases.join(follows,
+        drain(purchases.join(follows,
             col("u1") === col("u2") &&
               col("t2") > col("t1") && col("t2") <= col("t1") + expr("INTERVAL 10 MINUTES"),
             "left_outer")
           .select("purchase_id", "follow_id", "follow_type")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .writeStream.format("parquet").option("path", out).outputMode("append"), ckpt)
         s.read.parquet(out).orderBy(asc("purchase_id"), asc_nulls_first("follow_id"))
       } }
     },
@@ -896,13 +827,10 @@ object StreamingOps {
       implicit val outEnc: Encoder[(Long, Long, Long)] =
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
       implicit val stateEnc: Encoder[Long] = Encoders.scalaLong
-      val out = Housekeeping.tempDirBounded("st_cutoff_out",
-        Housekeeping.scratchDir("st_cutoff_out")).toString
-      val (src, srcDir) = eventStream(s, d)
-      val ckpt = tmp("ckpt_cutoff")
+      val out = Housekeeping.boundedScratch("st_cutoff_out").toString
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
-        val q = src
+      streamDirs("st_cutoff") { (srcDir, ckpt) => withStatePartitions(s) {
+        drain(eventStream(s, d, srcDir)
           .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
             col("event_type"), col("value"))
           .as[(Long, Long, Long, String, Double)](rowEnc)
@@ -925,13 +853,10 @@ object StreamingOps {
           }
           .toDF("user_id", "event_id", "bal_e2")
           .writeStream.outputMode("update")
-          .foreachBatch((batch: DataFrame, _: Long) => {
-            batch.write.mode("append").parquet(out)
+          .foreachBatch((batch: DataFrame, id: Long) => {
+            appendTo(out)(batch, id)
             nBatches.incrementAndGet(); ()
-          })
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }), ckpt)
         // The per-invocation (ts, event_id) sort orders each meter's ledger
         // only WITHIN one micro-batch; batch/stream parity therefore relies
         // on the staged source (one file, no maxFilesPerTrigger) delivering
@@ -981,8 +906,8 @@ object StreamingOps {
     * gateway uploads — the same `doc_id` arriving in two deliveries, or
     * twice within one — are the ingest's defining reality and must be
     * NO-OPS. Each batch is first deduped on doc_id, then anti-joined
-    * against the standing shingle index (the `dedup_incremental_exact`
-    * idiom), so only never-seen documents are signed, probed, and appended:
+    * against the standing shingle index ([[dropSeen]]), so only
+    * never-seen documents are signed, probed, and appended:
     * the index keeps its primary key (exactly 16 band rows + 1 shingle row
     * per distinct doc_id ever seen) and the pair output can't double-count.
     * Delivery 2 deliberately re-uploads every 17th earlier document so the
@@ -990,11 +915,11 @@ object StreamingOps {
     *
     * IDEMPOTENT per-batch commits (restart/retry safety): every batch
     * writes its pairs/bands/shingles under `b<batchId>/` generation dirs in
-    * OVERWRITE mode and then drops a `_b<batchId>.done` marker; a
-    * re-executed batch (checkpoint restart) short-circuits on the marker,
-    * and a retry of a batch that died mid-write overwrites its own partial
-    * output — which the standing-index read can't see anyway, because the
-    * probe/anti-join only union generation dirs with id < batchId.
+    * OVERWRITE mode inside [[oncePerBatch]]; a re-executed batch
+    * (checkpoint restart) short-circuits on the marker, and a retry of a
+    * batch that died mid-write overwrites its own partial output — which
+    * the standing-index read can't see anyway, because the probe/anti-join
+    * read the pinned prior version ([[TableManifest.snapshotAt]]).
     *
     * Scale notes (100 TB ingest): per micro-batch the work is
     * batch-signing (∝ delta) + one bucket equi-join of delta bands against
@@ -1021,17 +946,58 @@ object StreamingOps {
     * rows + one shingle row per distinct document ever seen (exact counts
     * pinned), the same index a batch pipeline would persist — so the
     * streaming and batch paths SHARE their index format. */
-  /** Last run's artifact roots, keyed by (op kind, sfDir) — test hooks for
-    * the state-growth / lane assertions (StreamDedupMinhashSpec,
-    * StreamQualityGateSpec). Keyed, not a bare var: two concurrent op
-    * executions at different scale factors must not clobber each other's
-    * hook (the round-14 ADVICE race). */
+  /** Last run's artifact roots and counts, keyed by (op kind, sfDir) —
+    * test hooks for the state-growth / lane / prune assertions
+    * (StreamDedupMinhashSpec, StreamQualityGateSpec, StreamCorpusBuildSpec)
+    * and the upsert's version count (CorpusOpsSpec). Keyed, not a bare var:
+    * two concurrent op executions at different scale factors must not
+    * clobber each other's hook (the round-14 ADVICE race). */
   private val lastRunRoots =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def lastRoot(kind: String, d: String): String =
     lastRunRoots.get(s"$kind|$d")
   private def recordRoot(kind: String, d: String, root: String): Unit =
     lastRunRoots.put(s"$kind|$d", root)
+
+  /** A pinned snapshot of a standing manifest table: its files and
+    * per-file [min, max] zone maps ([[TableManifest.snapshotAt]]). */
+  private type Snapshot = (Seq[Path], Map[Path, (Long, Long)])
+
+  /** The fold kit's one pruning step: the snapshot's files whose zone map
+    * holds at least one of `pts`, with the kept/total file count recorded
+    * under `<tag>_b<batchId>` for the specs. An empty snapshot prunes to
+    * nothing without evaluating `pts`. */
+  private def pruned(tag: String, d: String, batchId: Long, snap: Snapshot)(
+      pts: => Seq[Long]): Seq[Path] =
+    if (snap._1.isEmpty) Nil
+    else {
+      val pf = TableManifest.pruneForPoints(snap._1, snap._2, pts)
+      recordRoot(s"${tag}_b$batchId", d, s"${pf.size}/${snap._1.size}")
+      pf
+    }
+
+  /** Re-upload hardening: `batch` without the doc_ids already present in
+    * the (pruned) standing files. The broadcast-probe spelling: the
+    * standing id column streams against the broadcast batch ids, then the
+    * small seen set is anti-joined broadcast — a plain left_anti would
+    * shuffle the unbounded standing side every batch. */
+  private def dropSeen(batch: DataFrame, standing: Seq[Path]): DataFrame =
+    if (standing.isEmpty) batch
+    else {
+      val seen = batch.sparkSession.read.parquet(standing.map(_.toString): _*)
+        .select("doc_id").join(broadcast(batch.select("doc_id")), "doc_id")
+      batch.join(broadcast(seen), Seq("doc_id"), "left_anti")
+    }
+
+  /** The fold's commit point: run `body` unless batch `batchId` already
+    * committed under `root`, then drop its `_b<id>.done` marker. A replayed
+    * batch (checkpoint restart) is a no-op; a batch that died mid-body
+    * reruns and overwrites its own partial `b<id>` generations, which no
+    * reader sees because every read pins the prior version. */
+  private def oncePerBatch(root: String, batchId: Long)(body: => Unit): Unit = {
+    val marker = Paths.get(root, s"_b$batchId.done")
+    if (!Files.exists(marker)) { body; Files.createFile(marker) }
+  }
 
   /** Bucket space of the standing band index's cluster key. Wide (2²⁰) on
     * purpose: a file's zone-map range must be NARROW relative to a
@@ -1067,12 +1033,12 @@ object StreamingOps {
     * which is what lets a probe's bounded point set skip most of the
     * standing table before any scan task launches. */
   private[graft] def commitClusteredGen(df: DataFrame, genDir: String,
-      root: java.nio.file.Path, version: Long, statsCol: String,
-      priorFiles: Seq[java.nio.file.Path],
-      priorStats: Map[java.nio.file.Path, (Long, Long)], parts: Int = 8): Unit = {
+      root: Path, version: Long, statsCol: String,
+      priorFiles: Seq[Path],
+      priorStats: Map[Path, (Long, Long)], parts: Int = 8): Unit = {
     df.repartitionByRange(parts, col(statsCol)).sortWithinPartitions(statsCol)
       .write.mode("overwrite").parquet(genDir)
-    val genFiles = TableManifest.parquetFiles(java.nio.file.Paths.get(genDir))
+    val genFiles = TableManifest.parquetFiles(Paths.get(genDir))
     // zone maps come from the just-written files' parquet FOOTERS — one
     // driver-side metadata walk, no re-scan job (round 16; was a
     // groupBy(input_file_name) aggregate per commit)
@@ -1113,7 +1079,7 @@ object StreamingOps {
     * sliver tail, never a full-table rewrite.
     *
     * Returns (newVersion, filesBefore, filesAfter). */
-  private[graft] def compactStandingTable(s: SparkSession, root: java.nio.file.Path,
+  private[graft] def compactStandingTable(s: SparkSession, root: Path,
       statsCol: String, targetFileBytes: Long = 64L << 20,
       doVacuum: Boolean = true): (Long, Int, Int) = {
     val (cur, files) = TableManifest.read(root)
@@ -1154,8 +1120,7 @@ object StreamingOps {
     "stream_index_compact",
     (s, d) => {
       val nGens = 10
-      val root = Housekeeping.tempDirBounded("st_compact_root",
-        Housekeeping.scratchDir("st_compact_root"))
+      val root = Housekeeping.boundedScratch("st_compact_root")
       recordRoot("compact", d, root.toString)
       val docs = graft.tables.Tables.documents(s, d)
         .select("doc_id", "source", "n_chars")
@@ -1168,8 +1133,8 @@ object StreamingOps {
         .repartitionByRange(nGens * 2, col("gen"), col("doc_id"))
         .sortWithinPartitions("gen", "doc_id")
         .write.partitionBy("gen").parquet(dataDir.toString)
-      var files = Seq.empty[java.nio.file.Path]
-      var stats = Map.empty[java.nio.file.Path, (Long, Long)]
+      var files = Seq.empty[Path]
+      var stats = Map.empty[Path, (Long, Long)]
       (0 until nGens).foreach { g =>
         val gf = TableManifest.parquetFiles(dataDir.resolve(s"gen=$g"))
         files = files ++ gf
@@ -1203,11 +1168,8 @@ object StreamingOps {
   val streamDedupMinhash: Op = Op(
     "stream_dedup_minhash",
     (s, d) => {
-      val srcDir = Housekeeping.scratchDir("st_minhash_src")
-      val idxRoot = Housekeeping.tempDirBounded("st_minhash_idx",
-        Housekeeping.scratchDir("st_minhash_idx")).toString
+      val idxRoot = Housekeeping.boundedScratch("st_minhash_idx").toString
       recordRoot("minhash", d, idxRoot)
-      val ckpt = tmp("st_minhash_ckpt")
       val docs = graft.tables.Tables.documents(s, d).select("doc_id", "text")
       val bandsDir = s"$idxRoot/bands"
       val shinglesDir = s"$idxRoot/shingles"
@@ -1221,67 +1183,35 @@ object StreamingOps {
               size(array_union(col("sh_a"), col("sh_b"))))
           .where(col("jaccard") >= 0.8)
           .select("doc_a", "doc_b", "jaccard")
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      streamDirs("st_minhash") { (srcDir, ckpt) => withStatePartitions(s) {
         // deliveries split by doc_id mod n ([[stageModDeliveries]]): planted
         // duplicate pairs (adjacent ids) straddle deliveries, so the
         // cross-batch probe path carries real matches, not just the
         // within-batch one; the last delivery additionally RE-UPLOADS every
         // 17th earlier document — the fold must treat them as no-ops.
         stageModDeliveries(docs, srcDir, deliveryCount(s))
-        val q = s.readStream.schema(docs.schema)
+        drain(s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val ss = batch.sparkSession
-            val marker = java.nio.file.Paths.get(idxRoot, s"_b$batchId.done")
-            // the band index is a manifest table (version k = state after
-            // batch k-1) — a retry reads the PINNED version k snapshot, so
-            // its own partially-committed version k+1 stays invisible even
-            // though the live manifest may already point at it
-            val bandsP = java.nio.file.Paths.get(bandsDir)
-            def bandStateAt(id: Long): (Seq[java.nio.file.Path],
-                Map[java.nio.file.Path, (Long, Long)]) =
-              if (id == 0) (Nil, Map.empty)
-              else (TableManifest.filesAsOf(bandsP, id), TableManifest.statsOf(bandsP, id))
-            // the shingle table is a manifest table exactly like the bands
-            // (round 16; the round-15 verdict's #1 — the last O(corpus)
-            // per-batch read): generations are range-clustered on doc_id
-            // with per-file [min, max] zone maps, and every standing-side
-            // read below prunes the PINNED prior version's file list to the
-            // point set it actually probes before any scan task launches
-            val shinglesP = java.nio.file.Paths.get(shinglesDir)
-            def shStateAt(id: Long): (Seq[java.nio.file.Path],
-                Map[java.nio.file.Path, (Long, Long)]) =
-              if (id == 0) (Nil, Map.empty)
-              else (TableManifest.filesAsOf(shinglesP, id), TableManifest.statsOf(shinglesP, id))
-            if (!Files.exists(marker)) {
-              val (priorShFiles, priorShStats) = shStateAt(batchId)
+            // the band and shingle indexes are manifest tables (version k =
+            // state after batch k-1): a retry reads the PINNED version k
+            // snapshot, so its own partially-committed version k+1 stays
+            // invisible even though the live manifest may already point at it
+            val bandsP = Paths.get(bandsDir)
+            val shinglesP = Paths.get(shinglesDir)
+            oncePerBatch(idxRoot, batchId) {
+              val sh = TableManifest.snapshotAt(shinglesP, batchId)
               // re-upload hardening: dedup within the batch, then drop every
-              // already-indexed doc_id — only never-seen docs are signed.
-              // The seen-id lookup pays I/O ∝ the BATCH's id footprint: the
-              // batch's (bounded) id set prunes the standing file list at
-              // the manifest level, then the surviving files' id column
-              // STREAMS against the broadcast batch ids (round 15 — a plain
-              // left_anti would shuffle the unbounded standing side every
-              // batch), and the signature projection runs AFTER the
-              // anti-join so re-uploads are never signed.
+              // already-indexed doc_id (pruned to the batch's id footprint)
+              // — only never-seen docs are signed, and the signature
+              // projection runs AFTER the anti-join so re-uploads never are
               val distinctB = batch.dropDuplicates("doc_id")
               val batchIds = distinctB.select("doc_id").collect().map(_.getLong(0)).toSeq
-              val unseen =
-                if (priorShFiles.isEmpty) distinctB
-                else {
-                  val seenF = TableManifest.pruneForPoints(
-                    priorShFiles, priorShStats, batchIds)
-                  recordRoot(s"minhash_shprune_seen_b$batchId", d,
-                    s"${seenF.size}/${priorShFiles.size}")
-                  if (seenF.isEmpty) distinctB
-                  else {
-                    val seen = ss.read.parquet(seenF.map(_.toString): _*).select("doc_id")
-                      .join(broadcast(distinctB.select("doc_id")), "doc_id")
-                    distinctB.join(broadcast(seen), Seq("doc_id"), "left_anti")
-                  }
-                }
+              val unseen = dropSeen(distinctB,
+                pruned("minhash_shprune_seen", d, batchId, sh)(batchIds))
               val base = LlmOps.minhashBatchBase(unseen).cache()
               try {
                 val bands = LlmOps.minhashBands(base)
@@ -1298,43 +1228,33 @@ object StreamingOps {
                 // pruned at the MANIFEST level to the files whose bkey zone
                 // map intersects this batch's bucket points — per-batch index
                 // I/O tracks the batch's key footprint, not the corpus
-                val (priorBandFiles, priorBandStats) = bandStateAt(batchId)
+                val bandSnap = TableManifest.snapshotAt(bandsP, batchId)
+                val prunedF = pruned("minhash_prune", d, batchId, bandSnap)(
+                  bands.select(bandBucketKey.as("bkey"))
+                    .distinct().collect().map(_.getLong(0)).toSeq)
                 val cross =
-                  if (priorBandFiles.isEmpty) within.limit(0)
+                  if (prunedF.isEmpty) within.limit(0)
                   else {
-                    val deltaKeys = bands.select(bandBucketKey.as("bkey"))
-                      .distinct().collect().map(_.getLong(0)).toSeq
-                    val prunedF = TableManifest.pruneForPoints(
-                      priorBandFiles, priorBandStats, deltaKeys)
-                    recordRoot(s"minhash_prune_b$batchId", d,
-                      s"${prunedF.size}/${priorBandFiles.size}")
-                    if (prunedF.isEmpty) within.limit(0)
+                    // candidate pairs are driver-bounded BY DESIGN (the
+                    // verify broadcasts them), so collecting them adds no
+                    // new bound — and buys the exact-Jaccard verify a
+                    // manifest prune of the standing SHINGLE files down to
+                    // the CANDIDATE doc_ids
+                    val candPairs = minhashCrossProbe(bands,
+                        ss.read.parquet(prunedF.map(_.toString): _*))
+                      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+                    if (candPairs.isEmpty) within.limit(0)
                     else {
-                      // candidate pairs are driver-bounded BY DESIGN (the
-                      // verify broadcasts them), so collecting them adds no
-                      // new bound — and buys the exact-Jaccard verify a
-                      // manifest prune of the standing SHINGLE files down
-                      // to the CANDIDATE doc_ids (round 16; until then this
-                      // read was the last O(corpus)-per-batch scan)
-                      val candPairs = minhashCrossProbe(bands,
-                          ss.read.parquet(prunedF.map(_.toString): _*))
-                        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-                      if (candPairs.isEmpty) within.limit(0)
-                      else {
-                        import ss.implicits._
-                        val cand = candPairs.toDF("doc_a", "doc_b")
-                        val candIds = candPairs.flatMap(p => Seq(p._1, p._2)).distinct
-                        val candShF = TableManifest.pruneForPoints(
-                          priorShFiles, priorShStats, candIds)
-                        recordRoot(s"minhash_shprune_verify_b$batchId", d,
-                          s"${candShF.size}/${priorShFiles.size}")
-                        val idxShingles =
-                          if (candShF.isEmpty) shingles.limit(0)
-                          else ss.read.parquet(candShF.map(_.toString): _*)
-                        verified(cand,
-                          shingles.unionByName(idxShingles),
-                          shingles.unionByName(idxShingles))
-                      }
+                      import ss.implicits._
+                      val cand = candPairs.toDF("doc_a", "doc_b")
+                      val candShF = pruned("minhash_shprune_verify", d, batchId, sh)(
+                        candPairs.flatMap(p => Seq(p._1, p._2)).distinct)
+                      val idxShingles =
+                        if (candShF.isEmpty) shingles.limit(0)
+                        else ss.read.parquet(candShF.map(_.toString): _*)
+                      verified(cand,
+                        shingles.unionByName(idxShingles),
+                        shingles.unionByName(idxShingles))
                     }
                   }
                 within.unionByName(cross).distinct()
@@ -1345,17 +1265,12 @@ object StreamingOps {
                 // side of both probes' file skipping
                 commitClusteredGen(bands.withColumn("bkey", bandBucketKey),
                   s"$bandsDir/b$batchId", bandsP, batchId + 1, "bkey",
-                  priorBandFiles, priorBandStats)
+                  bandSnap._1, bandSnap._2)
                 commitClusteredGen(shingles, s"$shinglesDir/b$batchId",
-                  shinglesP, batchId + 1, "doc_id", priorShFiles, priorShStats)
-                Files.createFile(marker) // the batch's commit point
+                  shinglesP, batchId + 1, "doc_id", sh._1, sh._2)
               } finally base.unpersist()
             }
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }, ckpt)
         // every-K-generations maintenance tick ([[compactStandingTable]],
         // round 17): once the standing band/shingle tables have accrued >=
         // `graft.stream.compact.every` generations (default 4; 0 disables),
@@ -1367,8 +1282,8 @@ object StreamingOps {
         // checkpoint's replay horizon (see the compaction scaladoc).
         val every = s.conf.getOption("graft.stream.compact.every")
           .map(_.toInt).getOrElse(4)
-        if (every > 0) Seq((java.nio.file.Paths.get(bandsDir), "bkey"),
-            (java.nio.file.Paths.get(shinglesDir), "doc_id")).foreach {
+        if (every > 0) Seq((Paths.get(bandsDir), "bkey"),
+            (Paths.get(shinglesDir), "doc_id")).foreach {
           case (p, c) =>
             if (Files.exists(p.resolve(TableManifest.fileName)) &&
                 TableManifest.read(p)._1 >= every) {
@@ -1394,33 +1309,18 @@ object StreamingOps {
       "WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.8) " +
       "SELECT doc_a, doc_b, jaccard FROM j ORDER BY doc_a, doc_b"))
 
-  /** Generation dirs committed BEFORE a batch (`b<id>` under `dir`, id <
-    * batchId): the read side of the batchId-keyed idempotent-commit idiom —
-    * a retried batch never sees its own partial output, a replayed batch
-    * anti-joins against exactly what its first run saw. */
-  private[graft] def committedGensBefore(dir: String, batchId: Long): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      val ls = Files.list(p)
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.matches("b\\d+") && n.drop(1).toLong < batchId)
-        .map(n => s"$dir/$n").toList.sorted
-      finally ls.close()
-    }
-  }
-
   /** STREAMING QUALITY GATE — `dq_quarantine_split`'s lane-routing applied
     * to a document INGEST stream: each micro-batch's documents get the
     * [[LlmOps.textQualityFilter]] verdict and are routed to a `clean/` or
     * `quarantine/` generation dir (machine-readable reasons preserved on the
     * quarantine lane), so downstream corpus builds only ever read the clean
-    * lane while nothing is deleted. Exactly-once discipline is the
-    * [[streamDedupMinhash]] idiom end to end: batchId-keyed OVERWRITE
-    * generations + a `_b<id>.done` marker (a replayed batch is a no-op), and
-    * re-uploaded documents (delivery 2 re-posts every 17th earlier doc — the
-    * duplicate gateway upload) are dropped by an anti-join against the ids
-    * already routed by COMMITTED generations, so each doc is routed exactly
+    * lane while nothing is deleted. Exactly-once discipline is the fold
+    * kit shared with [[streamDedupMinhash]]: batchId-keyed OVERWRITE
+    * generations + [[oncePerBatch]]'s `_b<id>.done` marker (a replayed batch
+    * is a no-op), and re-uploaded documents (delivery 2 re-posts every 17th
+    * earlier doc — the duplicate gateway upload) are dropped by [[dropSeen]]
+    * against the ids already routed by COMMITTED generations
+    * ([[TableManifest.snapshotAt]]), so each doc is routed exactly
     * once no matter how often it arrives. The fold over deliveries must
     * reproduce the batch op's per-doc verdicts bit-for-bit — the oracle IS
     * `text_quality_filter`'s. Per-batch cost ∝ batch: both lanes are
@@ -1431,53 +1331,33 @@ object StreamingOps {
   val streamQualityGate: Op = Op(
     "stream_quality_gate",
     (s, d) => {
-      val srcDir = Housekeeping.scratchDir("st_qgate_src")
-      val root = Housekeeping.tempDirBounded("st_qgate_root",
-        Housekeeping.scratchDir("st_qgate_root")).toString
+      val root = Housekeeping.boundedScratch("st_qgate_root").toString
       recordRoot("qgate", d, root)
-      val ckpt = tmp("st_qgate_ckpt")
       val docs = graft.tables.Tables.documents(s, d).select("doc_id", "text", "n_chars")
       val cleanDir = s"$root/clean"
       val quarDir = s"$root/quarantine"
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      streamDirs("st_qgate") { (srcDir, ckpt) => withStatePartitions(s) {
         stageModDeliveries(docs, srcDir, deliveryCount(s))
-        val q = s.readStream.schema(docs.schema)
+        drain(s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            val marker = java.nio.file.Paths.get(root, s"_b$batchId.done")
-            // both lanes are manifest tables since round 16 (the
-            // stream_dedup_minhash idiom): generations range-clustered on
+            // both lanes are manifest tables: generations range-clustered on
             // doc_id with footer zone maps, so the routed-id probe prunes
             // to the BATCH's id footprint instead of scanning every lane
             // generation per batch
-            val cleanP = java.nio.file.Paths.get(cleanDir)
-            val quarP = java.nio.file.Paths.get(quarDir)
-            def laneAt(p: java.nio.file.Path, id: Long): (Seq[java.nio.file.Path],
-                Map[java.nio.file.Path, (Long, Long)]) =
-              if (id == 0) (Nil, Map.empty)
-              else (TableManifest.filesAsOf(p, id), TableManifest.statsOf(p, id))
-            if (!Files.exists(marker)) {
-              val (cF, cS) = laneAt(cleanP, batchId)
-              val (qF, qS) = laneAt(quarP, batchId)
+            val cleanP = Paths.get(cleanDir)
+            val quarP = Paths.get(quarDir)
+            oncePerBatch(root, batchId) {
+              val (cF, cS) = TableManifest.snapshotAt(cleanP, batchId)
+              val (qF, qS) = TableManifest.snapshotAt(quarP, batchId)
               val fresh0 = batch.dropDuplicates("doc_id")
               val batchIds = fresh0.select("doc_id").collect().map(_.getLong(0)).toSeq
-              val routedF = TableManifest.pruneForPoints(cF, cS, batchIds) ++
-                TableManifest.pruneForPoints(qF, qS, batchIds)
-              recordRoot(s"qgate_prune_b$batchId", d,
-                s"${routedF.size}/${cF.size + qF.size}")
-              // broadcast-probe anti-join: the (pruned) standing routed-id
-              // column streams against the broadcast batch ids (round 15 —
-              // a plain left_anti would shuffle the unbounded lanes every
-              // batch)
-              val fresh = if (routedF.isEmpty) fresh0
-                else {
-                  val seen = ss.read.parquet(routedF.map(_.toString): _*).select("doc_id")
-                    .join(broadcast(fresh0.select("doc_id")), "doc_id")
-                  fresh0.join(broadcast(seen), Seq("doc_id"), "left_anti")
-                }
+              // one prune over both lanes' files (disjoint paths, so the
+              // merged stats keep each file's own zone map)
+              val fresh = dropSeen(fresh0,
+                pruned("qgate_prune", d, batchId, (cF ++ qF, cS ++ qS))(batchIds))
               val badLen = col("n_chars") < 64 || col("n_chars") > 4096
               val badTok = size(split(col("text"), " ")) < 10
               val badChars = !col("text").rlike("^[a-z ]+$")
@@ -1494,14 +1374,8 @@ object StreamingOps {
                 commitClusteredGen(verdict.where(!col("keep")),
                   s"$quarDir/b$batchId", quarP, batchId + 1, "doc_id", qF, qS)
               } finally verdict.unpersist()
-              Files.createFile(marker) // the batch's commit point
-              ()
             }
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }, ckpt)
         s.read.option("recursiveFileLookup", "true").parquet(cleanDir)
           .unionByName(s.read.option("recursiveFileLookup", "true").parquet(quarDir))
           .orderBy("doc_id")
@@ -1548,11 +1422,11 @@ object StreamingOps {
     * streams through its per-batch join with the BOUNDED batch broadcast —
     * the `minhashCrossProbe` spelling — so standing state is never
     * shuffled per batch; the revalidation pass is skipped entirely when a
-    * batch adds no new eval shingles. Exactly-once is the family's
-    * batchId-keyed OVERWRITE generations + `_b<id>.done` markers, and
+    * batch adds no new eval shingles. Exactly-once is the fold kit's
+    * batchId-keyed OVERWRITE generations + [[oncePerBatch]] markers, and
     * delivery 2 re-uploads every 17th earlier document (the duplicate
-    * gateway upload) — dropped by the broadcast-probe anti-join against
-    * the standing docstate ids, and inert in the dictionary lane because
+    * gateway upload) — dropped by [[dropSeen]] against the standing
+    * docstate ids, and inert in the dictionary lane because
     * an already-seen doc's shingles are already in the dictionary. The
     * final answer is one aggregate over the narrow folded state (no text,
     * no shingles) — the state-table-then-query shape of every streaming
@@ -1560,68 +1434,41 @@ object StreamingOps {
   val streamCorpusBuild: Op = Op(
     "stream_corpus_build",
     (s, d) => {
-      val srcDir = Housekeeping.scratchDir("st_corpus_src")
-      val root = Housekeeping.tempDirBounded("st_corpus_root",
-        Housekeeping.scratchDir("st_corpus_root")).toString
+      val root = Housekeeping.boundedScratch("st_corpus_root").toString
       recordRoot("corpus", d, root)
-      val ckpt = tmp("st_corpus_ckpt")
       val docs = graft.tables.Tables.documents(s, d)
         .select("doc_id", "source", "text", "n_chars")
       val stateDir = s"$root/docstate"
       val dictDir = s"$root/dict"
       val hitsDir = s"$root/hits"
       val shDir = s"$root/shingles"
-      withStatePartitions(s) { cleanupAfter(Seq(srcDir.toString, ckpt)) {
+      streamDirs("st_corpus") { (srcDir, ckpt) => withStatePartitions(s) {
         stageModDeliveries(docs, srcDir, deliveryCount(s))
-        val q = s.readStream.schema(docs.schema)
+        drain(s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val ss = batch.sparkSession
-            val marker = java.nio.file.Paths.get(root, s"_b$batchId.done")
-            if (!Files.exists(marker)) {
-              // all three standing tables are manifest tables since round 16
-              // (the round-15 verdict's #1/#3): docstate clustered on
-              // doc_id, the dictionary and the INVERTED pool shingle index
-              // clustered on the shingle's bucket key — every standing-side
-              // read below prunes the PINNED prior version's file list to
-              // the bounded point set it probes, so no per-batch read
-              // anywhere in this fold is O(corpus)
-              val stateP = java.nio.file.Paths.get(stateDir)
-              val dictP = java.nio.file.Paths.get(dictDir)
-              val poolP = java.nio.file.Paths.get(shDir)
-              def stateAt(p: java.nio.file.Path, id: Long): (Seq[java.nio.file.Path],
-                  Map[java.nio.file.Path, (Long, Long)]) =
-                if (id == 0) (Nil, Map.empty)
-                else (TableManifest.filesAsOf(p, id), TableManifest.statsOf(p, id))
-              val (stFiles, stStats) = stateAt(stateP, batchId)
-              val (dictFiles, dictStats) = stateAt(dictP, batchId)
-              val (poolFiles, poolStats) = stateAt(poolP, batchId)
-              def prune(files: Seq[java.nio.file.Path],
-                  stats: Map[java.nio.file.Path, (Long, Long)],
-                  pts: Seq[Long], tag: String): Seq[java.nio.file.Path] = {
-                val pf = TableManifest.pruneForPoints(files, stats, pts)
-                recordRoot(s"corpus_prune_${tag}_b$batchId", d,
-                  s"${pf.size}/${files.size}")
-                pf
-              }
+            oncePerBatch(root, batchId) {
+              // all three standing tables are manifest tables: docstate
+              // clustered on doc_id, the dictionary and the INVERTED pool
+              // shingle index clustered on the shingle's bucket key — every
+              // standing-side read below prunes the PINNED prior version's
+              // file list to the bounded point set it probes, so no
+              // per-batch read anywhere in this fold is O(corpus)
+              val stateP = Paths.get(stateDir)
+              val dictP = Paths.get(dictDir)
+              val poolP = Paths.get(shDir)
+              val st = TableManifest.snapshotAt(stateP, batchId)
+              val dict = TableManifest.snapshotAt(dictP, batchId)
+              val pool = TableManifest.snapshotAt(poolP, batchId)
               // re-upload hardening: within-batch dedupe, then drop every
-              // already-seen gated doc — the standing docstate file list is
-              // pruned to the batch's (bounded) id footprint, then its id
-              // column STREAMS against the broadcast batch ids
+              // already-seen gated doc (docstate pruned to the batch's ids)
               val distinctB = batch.dropDuplicates("doc_id")
               val batchIds = distinctB.select("doc_id").collect().map(_.getLong(0)).toSeq
-              val fresh = (if (stFiles.isEmpty) distinctB
-              else {
-                val pf = prune(stFiles, stStats, batchIds, "state")
-                if (pf.isEmpty) distinctB
-                else {
-                  val seen = ss.read.parquet(pf.map(_.toString): _*).select("doc_id")
-                    .join(broadcast(distinctB.select("doc_id")), "doc_id")
-                  distinctB.join(broadcast(seen), Seq("doc_id"), "left_anti")
-                }
-              }).cache()
+              val fresh = dropSeen(distinctB,
+                pruned("corpus_prune_state", d, batchId, st)(batchIds)).cache()
               try {
                 val gated = PipelineOps.corpusGate(fresh)
                 // dictionary lane: RAW src0 docs (the batch op's bench
@@ -1634,20 +1481,17 @@ object StreamingOps {
                 try {
                   val batchSrc0Keys = batchSrc0Sh.select(shingleBucketKey(col("s")).as("k"))
                     .distinct().collect().map(_.getLong(0)).toSeq
-                  val newdict = (if (dictFiles.isEmpty) batchSrc0Sh
+                  val dictF = pruned("corpus_prune_dict", d, batchId, dict)(batchSrc0Keys)
+                  val newdict = (if (dictF.isEmpty) batchSrc0Sh
                   else {
-                    val pf = prune(dictFiles, dictStats, batchSrc0Keys, "dict")
-                    if (pf.isEmpty) batchSrc0Sh
-                    else {
-                      val existing = ss.read.parquet(pf.map(_.toString): _*).select("s")
-                        .join(broadcast(batchSrc0Sh), "s").select("s").distinct()
-                      batchSrc0Sh.join(broadcast(existing), Seq("s"), "left_anti")
-                    }
+                    val existing = ss.read.parquet(dictF.map(_.toString): _*).select("s")
+                      .join(broadcast(batchSrc0Sh), "s").select("s").distinct()
+                    batchSrc0Sh.join(broadcast(existing), Seq("s"), "left_anti")
                   }).cache()
                   try {
                     commitClusteredGen(newdict.withColumn("skey", shingleBucketKey(col("s"))),
                       s"$dictDir/b$batchId", dictP, batchId + 1, "skey",
-                      dictFiles, dictStats)
+                      dict._1, dict._2)
                     // the new dictionary shingles' bucket keys: the reval
                     // prune's point set AND the skip-when-empty signal (one
                     // driver round-trip replaces the old isEmpty action)
@@ -1670,7 +1514,7 @@ object StreamingOps {
                           col("n_chars"), col("n_sh")).cache()
                       try commitClusteredGen(docstate,
                         s"$stateDir/b$batchId", stateP, batchId + 1, "doc_id",
-                        stFiles, stStats)
+                        st._1, st._2)
                       finally docstate.unpersist()
                       // arrival hits: the batch's pool docs vs the FULL
                       // dictionary (standing generations ∪ this batch's new
@@ -1681,17 +1525,13 @@ object StreamingOps {
                       val batchShRows = shArr.join(broadcast(poolIds), "doc_id")
                         .select(col("doc_id"), explode(col("shingles")).as("s")).cache()
                       try {
-                        val standingHits = if (dictFiles.isEmpty) batchShRows.limit(0)
-                        else {
-                          val batchPoolKeys = batchShRows
-                            .select(shingleBucketKey(col("s")).as("k"))
-                            .distinct().collect().map(_.getLong(0)).toSeq
-                          val pf = prune(dictFiles, dictStats, batchPoolKeys, "hits")
-                          if (pf.isEmpty) batchShRows.limit(0)
-                          else ss.read.parquet(pf.map(_.toString): _*).select("s")
+                        val hitsF = pruned("corpus_prune_hits", d, batchId, dict)(batchShRows
+                          .select(shingleBucketKey(col("s")).as("k"))
+                          .distinct().collect().map(_.getLong(0)).toSeq)
+                        val standingHits = if (hitsF.isEmpty) batchShRows.limit(0)
+                          else ss.read.parquet(hitsF.map(_.toString): _*).select("s")
                             .join(broadcast(batchShRows), "s")
                             .select("doc_id", "s")
-                        }
                         val newHits = batchShRows.join(broadcast(newdict.select("s")), "s")
                           .select("doc_id", "s")
                         // revalidation: the batch's NEW dictionary shingles
@@ -1700,16 +1540,13 @@ object StreamingOps {
                         // the cost is ∝ hits, never ∝ pool (the round-15
                         // verdict's #3); skipped outright when the batch
                         // added no dictionary shingles
-                        val revalHits = if (poolFiles.isEmpty || newdictKeys.isEmpty)
-                          batchShRows.limit(0)
-                        else {
-                          val pf = prune(poolFiles, poolStats, newdictKeys, "reval")
-                          if (pf.isEmpty) batchShRows.limit(0)
-                          else ss.read.parquet(pf.map(_.toString): _*)
+                        val revalF = if (newdictKeys.isEmpty) Nil
+                          else pruned("corpus_prune_reval", d, batchId, pool)(newdictKeys)
+                        val revalHits = if (revalF.isEmpty) batchShRows.limit(0)
+                          else ss.read.parquet(revalF.map(_.toString): _*)
                             .select("doc_id", "s")
                             .join(broadcast(newdict.select("s")), "s")
                             .select("doc_id", "s")
-                        }
                         // ONE union write per batch (round 16 — was two)
                         standingHits.unionByName(newHits).unionByName(revalHits)
                           .groupBy("doc_id").agg(count(lit(1)).as("nh"))
@@ -1720,19 +1557,14 @@ object StreamingOps {
                         commitClusteredGen(
                           batchShRows.withColumn("skey", shingleBucketKey(col("s"))),
                           s"$shDir/b$batchId", poolP, batchId + 1, "skey",
-                          poolFiles, poolStats)
-                        Files.createFile(marker) // the batch's commit point
+                          pool._1, pool._2)
                       } finally batchShRows.unpersist()
                     } finally shArr.unpersist()
                   } finally newdict.unpersist()
                 } finally batchSrc0Sh.unpersist()
               } finally fresh.unpersist()
             }
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }, ckpt)
         // the answer: one aggregate over the narrow folded state — keep =
         // min doc_id per hash falls out HERE, so arrival order never
         // mattered and replacements never needed retraction

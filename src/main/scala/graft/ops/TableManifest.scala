@@ -72,9 +72,12 @@ object TableManifest {
   }
 
   /** Read the table AS OF the current manifest — the only sanctioned read
-    * path for a manifest-committed table. An empty live set is a legal state
-    * (fully-deleted table); Spark can't scan zero files, so it must carry
-    * the schema — callers that can hit it pass `emptySchema`. */
+    * path for a manifest-committed table. Reads exactly the live files the
+    * manifest lists (never a directory listing) and infers the schema from
+    * their parquet footers. An empty live set is a legal table state
+    * (fully-deleted table), but Spark cannot infer a schema from zero
+    * files, so reading one fails with Spark's "unable to infer schema"
+    * AnalysisException. */
   def readTable(s: SparkSession, root: Path): DataFrame = {
     val (_, files) = read(root)
     s.read.parquet(files.map(_.toString): _*)
@@ -89,6 +92,14 @@ object TableManifest {
     val txt = Files.readString(root.resolve(s"_manifest-v$version.json"))
     """"(/[^"]+)"""".r.findAllMatchIn(txt).map(m => Paths.get(m.group(1))).toList
   }
+
+  /** The pinned snapshot of `version`: its files and per-file [min, max]
+    * zone maps ([[statsOf]]). Version 0 is the empty table — nothing
+    * committed yet. A streaming fold's batch k reads version k (the state
+    * after batches < k), so a retried batch never sees its own partial
+    * commit of version k+1. */
+  def snapshotAt(root: Path, version: Long): (Seq[Path], Map[Path, (Long, Long)]) =
+    if (version == 0) (Nil, Map.empty) else (filesAsOf(root, version), statsOf(root, version))
 
   /** Snapshot AS OF a past version, from its immutable `_manifest-v{N}`
     * log entry. Valid until [[vacuum]] reclaims the version's files. */

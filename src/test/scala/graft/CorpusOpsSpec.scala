@@ -313,7 +313,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     "latest-per-user model") {
     val got = graft.ops.StreamingOps.streamUpsertForeachbatch.fn(spark, TestSpark.sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(graft.ops.StreamingOps.lastUpsertVersions >= 2,
+    assert(graft.ops.StreamingOps.lastRoot("upsert_versions", TestSpark.sf0001).toInt >= 2,
       "expected a genuinely multi-batch run (maxFilesPerTrigger=1, two deliveries)")
     val model = graft.tables.Tables.events(spark, TestSpark.sf0001)
       .selectExpr("user_id", "event_id", "value",

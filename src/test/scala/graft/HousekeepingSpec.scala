@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Housekeeping, LlmOps, SourceSinkOps, StreamingOps}
+import graft.ops.{Housekeeping, LlmOps, SourceSinkOps, StatsOps, StreamingOps}
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,18 +11,30 @@ import scala.jdk.CollectionConverters._
 
 /** Soak: repeated invocations of the artifact-creating ops must hold a
   * bounded footprint (one live generation each). The registries are
-  * per-JVM, and /tmp carries leftovers from earlier JVMs, so every bound is
-  * asserted as *growth within this JVM*, not an absolute count. */
+  * per-JVM, and the scratch root carries leftovers from earlier JVMs, so
+  * every bound is asserted as *growth within this JVM*, not an absolute
+  * count; a count that is 0 after the first run would prove nothing, so
+  * each sink/table prefix is also asserted present. */
 class HousekeepingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmpCount(prefix: String): Int =
-    Files.list(Paths.get(System.getProperty("java.io.tmpdir"))).iterator().asScala
-      .count(_.getFileName.toString.startsWith(prefix))
+  /** Where [[Housekeeping.scratchDir]] creates its directories. */
+  private lazy val scratchRoot = {
+    val probe = Housekeeping.scratchDir("hk_probe")
+    Housekeeping.deleteRecursively(probe)
+    probe.getParent
+  }
+
+  private def scratchCount(prefix: String): Int = {
+    val ls = Files.list(scratchRoot)
+    try ls.iterator().asScala.count(_.getFileName.toString.startsWith(prefix))
+    finally ls.close()
+  }
 
   test("repeated bucketed-join runs keep one table generation") {
     SourceSinkOps.sinkBucketedJoin.fn(spark, TestSpark.sf0001).count() // gen 1
-    val dirsAfterFirst = tmpCount("graft_bucketed")
+    val dirsAfterFirst = scratchCount("graft_bucketed")
+    assert(dirsAfterFirst >= 1, s"no graft_bucketed dir under $scratchRoot")
     val tablesAfterFirst = spark.catalog.listTables().collect()
       .count(_.name.startsWith("li_bucketed_"))
     (1 to 2).foreach(_ => SourceSinkOps.sinkBucketedJoin.fn(spark, TestSpark.sf0001).count())
@@ -30,7 +42,7 @@ class HousekeepingSpec extends AnyFunSuite {
       .count(_.name.startsWith("li_bucketed_"))
     assert(tablesAfter == tablesAfterFirst,
       s"live bucketed tables grew $tablesAfterFirst -> $tablesAfter")
-    assert(tmpCount("graft_bucketed") <= dirsAfterFirst,
+    assert(scratchCount("graft_bucketed") <= dirsAfterFirst,
       "bucketed table dirs must not accumulate across runs")
   }
 
@@ -44,13 +56,14 @@ class HousekeepingSpec extends AnyFunSuite {
 
   test("repeated streaming runs keep one sink dir and one memory view per op") {
     StreamingOps.streamDedup.fn(spark, TestSpark.sf0001).count()
-    val sinkAfterFirst = tmpCount("st_dedup_out")
-    val ckptAfterFirst = tmpCount("st_dedup_ckpt")
-    val srcAfterFirst = tmpCount("st_src")
+    val sinkAfterFirst = scratchCount("st_dedup_out")
+    assert(sinkAfterFirst >= 1, s"no st_dedup_out sink dir under $scratchRoot")
+    val ckptAfterFirst = scratchCount("st_dedup_ckpt")
+    val srcAfterFirst = scratchCount("st_dedup_src")
     StreamingOps.streamDedup.fn(spark, TestSpark.sf0001).count()
-    assert(tmpCount("st_dedup_out") <= sinkAfterFirst, "sink dirs must not accumulate")
-    assert(tmpCount("st_dedup_ckpt") <= ckptAfterFirst, "checkpoints must be deleted after drain")
-    assert(tmpCount("st_src") <= srcAfterFirst, "staged sources must be deleted after drain")
+    assert(scratchCount("st_dedup_out") <= sinkAfterFirst, "sink dirs must not accumulate")
+    assert(scratchCount("st_dedup_ckpt") <= ckptAfterFirst, "checkpoints must be deleted after drain")
+    assert(scratchCount("st_dedup_src") <= srcAfterFirst, "staged sources must be deleted after drain")
 
     StreamingOps.streamTumblingWatermark.fn(spark, TestSpark.sf0001).count()
     val viewsAfterFirst = spark.catalog.listTables().collect()
@@ -92,14 +105,25 @@ class HousekeepingSpec extends AnyFunSuite {
   test("repeated jsonl/orc round-trips keep one temp dir each") {
     SourceSinkOps.sourceJsonlRoundtrip.fn(spark, TestSpark.sf0001).count()
     SourceSinkOps.sourceOrcRoundtrip.fn(spark, TestSpark.sf0001).count()
-    val jsonlAfterFirst = tmpCount("graft_jsonl")
-    val orcAfterFirst = tmpCount("graft_orc")
+    val jsonlAfterFirst = scratchCount("graft_jsonl")
+    val orcAfterFirst = scratchCount("graft_orc")
+    assert(jsonlAfterFirst >= 1 && orcAfterFirst >= 1,
+      s"no graft_jsonl/graft_orc dir under $scratchRoot")
     (1 to 2).foreach { _ =>
       SourceSinkOps.sourceJsonlRoundtrip.fn(spark, TestSpark.sf0001).count()
       SourceSinkOps.sourceOrcRoundtrip.fn(spark, TestSpark.sf0001).count()
     }
-    assert(tmpCount("graft_jsonl") <= jsonlAfterFirst, "jsonl dirs must not accumulate")
-    assert(tmpCount("graft_orc") <= orcAfterFirst, "orc dirs must not accumulate")
+    assert(scratchCount("graft_jsonl") <= jsonlAfterFirst, "jsonl dirs must not accumulate")
+    assert(scratchCount("graft_orc") <= orcAfterFirst, "orc dirs must not accumulate")
+  }
+
+  test("bounded sink dirs live under the scratch root (SPARK_GRAFT_SCRATCH covers them)") {
+    val files = StatsOps.statsCollect.fn(spark, TestSpark.sf0001).inputFiles
+    assert(files.nonEmpty, "stats_collect must read its persisted stats table back")
+    files.foreach { f =>
+      val p = Paths.get(new java.net.URI(f))
+      assert(p.startsWith(scratchRoot), s"$p lies outside the scratch root $scratchRoot")
+    }
   }
 
   test("observed metrics: returned once the action ran; an unrun observation fails in bound") {
