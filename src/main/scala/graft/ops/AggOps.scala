@@ -63,10 +63,6 @@ object AggOps {
       "COUNT(DISTINCT CAST(o_orderdate AS DATE)) AS n_days " +
       "FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment"))
 
-  def hllStagePath(sfDir: String): String = Stage.root(sfDir) + "/hll_est"
-  def hllDailyStagePath(sfDir: String): String = Stage.root(sfDir) + "/hll_daily_est"
-  def thetaStagePath(sfDir: String): String = Stage.root(sfDir) + "/theta_est"
-
   /** HLL++ sketch — the 100 TB substitute for exact distinct. The estimate
     * is engine-specific (DuckDB's approx_distinct is a different sketch), so
     * the hash oracle is an ACCURACY-ENVELOPE check via the staged-
@@ -83,12 +79,11 @@ object AggOps {
       val est = Tables.events(s, d)
         .groupBy(col("event_type"))
         .agg(approx_count_distinct(col("user_id"), 0.02).as("approx_users"))
-      est.coalesce(1).write.mode("overwrite").parquet(hllStagePath(d))
+      val staged = Stage.put(est.coalesce(1), Stage.root(d) + "/hll_est")
       val exact = Tables.events(s, d)
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("exact_users"))
-      s.read.parquet(hllStagePath(d))
-        .join(exact, "event_type")
+      staged.join(exact, "event_type")
         .select(col("event_type"), col("approx_users"), col("exact_users"))
         .orderBy("event_type")
     },
@@ -132,15 +127,14 @@ object AggOps {
         hll_sketch_estimate(hll_union_agg(col("sk"), lit(false))).as("approx_users"))
         .select(lit("total").as("day"), col("approx_users"))
       val est = perDay.unionAll(total)
-      est.coalesce(1).write.mode("overwrite").parquet(hllDailyStagePath(d))
+      val staged = Stage.put(est.coalesce(1), Stage.root(d) + "/hll_daily_est")
       val exactDay = Tables.events(s, d)
         .groupBy(to_date(col("ts")).cast("string").as("day"))
         .agg(countDistinct(col("user_id")).as("exact_users"))
       val exactTotal = Tables.events(s, d)
         .agg(countDistinct(col("user_id")).as("exact_users"))
         .select(lit("total").as("day"), col("exact_users"))
-      s.read.parquet(hllDailyStagePath(d))
-        .join(exactDay.unionAll(exactTotal), "day")
+      staged.join(exactDay.unionAll(exactTotal), "day")
         .select(col("day"), col("approx_users"), col("exact_users"))
         .orderBy("day")
     },
@@ -279,9 +273,7 @@ object AggOps {
       // scalar — the boundary the job scheduler knows anyway)
       val split = e.agg(max(col("day"))).first().getDate(0)
       val standingDir = Housekeeping.boundedScratch("graft_rollup").toString
-      rollupPartial(e, col("day") < lit(split))
-        .write.mode("overwrite").parquet(standingDir)
-      s.read.parquet(standingDir)
+      Stage.put(rollupPartial(e, col("day") < lit(split)), standingDir)
         .unionAll(rollupPartial(e, col("day") >= lit(split)))
         .groupBy("day")
         .agg(sum(col("cnt")).as("cnt"), sum(col("sv")).cast("double").as("sum_value"))
@@ -438,7 +430,7 @@ object AggOps {
           F.thetaEstimate(F.thetaAnotB(col("ska"), col("skb"))).as("anb"))
         .select(expr("stack(5, 'first_day', a, 'last_day', b, 'union', u, " +
           "'intersect', i, 'first_not_last', anb) AS (metric, approx)"))
-      est.coalesce(1).write.mode("overwrite").parquet(thetaStagePath(d))
+      val staged = Stage.put(est.coalesce(1), Stage.root(d) + "/theta_est")
       val ua = e.where(col("day") === lit(da)).select("user_id").distinct()
       val ub = e.where(col("day") === lit(db)).select("user_id").distinct()
       def cnt(df: org.apache.spark.sql.DataFrame, m: String) =
@@ -448,7 +440,7 @@ object AggOps {
         .unionAll(cnt(ua.union(ub).distinct(), "union"))
         .unionAll(cnt(ua.intersect(ub), "intersect"))
         .unionAll(cnt(ua.except(ub), "first_not_last"))
-      s.read.parquet(thetaStagePath(d)).join(exact, "metric")
+      staged.join(exact, "metric")
         .select(col("metric"), col("approx"), col("exact"))
         .orderBy("metric")
     },
@@ -534,10 +526,8 @@ object AggOps {
       val dC = c.where(col("c_custkey") % 7 === 0)
       // the standing MV: persisted once, read back — never recomputed
       val mvDir = Housekeeping.boundedScratch("mv_join_v0").toString
-      o0.join(c0, col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("price"), col("seg"))
-        .write.mode("overwrite").parquet(mvDir)
-      val v0 = s.read.parquet(mvDir)
+      val v0 = Stage.put(o0.join(c0, col("o_custkey") === col("c_custkey"))
+        .select(col("o_orderkey"), col("price"), col("seg")), mvDir)
       // refresh = the three delta terms of the IVM identity
       val dv = dO.join(c0, col("o_custkey") === col("c_custkey"))
         .unionByName(o0.join(dC, col("o_custkey") === col("c_custkey")))

@@ -371,12 +371,6 @@ object LlmOps {
     simhashPairsFromSigs(
       Housekeeping.cacheBounded("simhash_base", simhashSignatures(docs)))
 
-  /** sf-scoped staging path for the persisted signature table — written by
-    * the query, read by both the banding and the DuckDB oracle; deliberately
-    * outside Housekeeping so Verify's releaseAll() can't delete it before
-    * the oracle pass (same [[Stage]] pattern as SourceSinkOps.csvStagePath). */
-  def simhashStagePath(sfDir: String): String = Stage.root(sfDir) + "/simhash_sigs"
-
   /** Oracle note (the round-7 minhash playbook, adapted): the emitted pairs
     * are EXACT given the signatures — every pair is verified by
     * bit_count(xor) ≤ 7, the banding loses nothing by pigeonhole (≤ 7
@@ -395,11 +389,8 @@ object LlmOps {
     * bit_count/xor on signed int64 agree bit-for-bit across engines. */
   val dedupSimhash: Op = Op(
     "dedup_simhash",
-    (s, d) => {
-      simhashSignatures(Tables.documents(s, d))
-        .write.mode("overwrite").parquet(simhashStagePath(d))
-      simhashPairsFromSigs(s.read.parquet(simhashStagePath(d)))
-    },
+    (s, d) => simhashPairsFromSigs(
+      Stage.put(simhashSignatures(Tables.documents(s, d)), Stage.root(d) + "/simhash_sigs")),
     Some("WITH s AS (SELECT doc_id, sig FROM " +
       s"read_parquet('${Stage.token}/simhash_sigs/*.parquet')) " +
       "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
@@ -1054,7 +1045,7 @@ object LlmOps {
     // probed cells vacant) — a zero-file parquet read cannot infer a schema,
     // so carry the known cell-file schema explicitly instead of throwing.
     val index =
-      if (files.nonEmpty) s.read.parquet(files.map(_.toString): _*)
+      if (files.nonEmpty) TableManifest.readFiles(s, files)
       else {
         import org.apache.spark.sql.types._
         s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -1284,8 +1275,8 @@ object LlmOps {
             if (!java.nio.file.Files.exists(marker)) {
               val (cur, curFiles) = TableManifest.read(root)
               if (!curFiles.exists(_.toString.contains(s"/genb$batchId/"))) {
-                val cents = ss.read.parquet(curFiles
-                  .filter(_.toString.contains("/centroids/")).map(_.toString): _*)
+                val cents = TableManifest.readFiles(ss,
+                  curFiles.filter(_.toString.contains("/centroids/")))
                 val genDir = root.resolve(s"cells/genb$batchId")
                 ivfAssignAgainst(batch, cents)
                   .withColumn("cell_dir", col("cell"))
@@ -1303,8 +1294,8 @@ object LlmOps {
             if (ppm >= floor) {
               streamRefreshLog.put(s"$d|b$batchId", s"retrain:$ppm")
               val (cur2, f2) = TableManifest.read(root)
-              val corpusNow = ss.read.parquet(f2
-                .filter(_.toString.contains("/cells/")).map(_.toString): _*)
+              val corpusNow = TableManifest.readFiles(ss,
+                f2.filter(_.toString.contains("/cells/")))
                 .select("neighbor_id", "vc", "nc")
               val newCents = ivfCentroidsOf(ss, ivfTrain(ss, corpusNow))
               newCents.write.mode("overwrite")
@@ -1383,7 +1374,7 @@ object LlmOps {
                    idx: java.nio.file.Path, version: Long): DataFrame = {
     val (centFiles, cellFiles) = TableManifest.filesAsOf(idx, version)
       .partition(_.toString.contains("/centroids/"))
-    cellFileProbe(s, d, s.read.parquet(centFiles.map(_.toString): _*), cellFiles)
+    cellFileProbe(s, d, TableManifest.readFiles(s, centFiles), cellFiles)
   }
 
   /** The from-scratch rebuild the swap replaces, probed in memory — must
@@ -1443,7 +1434,7 @@ object LlmOps {
     val path = driftCellsStagedFor.computeIfAbsent(d, _ => {
       val cellsDir = ivfAppendIndexPath(s, d).resolve("cells")
       def perCell(version: Long, name: String): DataFrame =
-        s.read.parquet(TableManifest.filesAsOf(cellsDir, version).map(_.toString): _*)
+        TableManifest.readTableAsOf(s, cellsDir, version)
           .groupBy(col("cell").cast("int").as("cell"))
           .agg(count(lit(1)).as(name))
       // v2 ⊇ v1 by the append contract (v1 files retained by reference), so

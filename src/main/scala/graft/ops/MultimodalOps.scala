@@ -445,11 +445,6 @@ object MultimodalOps {
       "CAST(COALESCE(SUM(CASE WHEN bit = 1 AND b < 32 THEN (CAST(1 AS BIGINT) << b) END), 0) AS BIGINT) AS dhash_lo " +
       "FROM bits GROUP BY doc_id ORDER BY doc_id"))
 
-  /** Staged dHash signature table (doc_id, sig) shared by the op and its
-    * all-pairs oracle — same staged-intermediate playbook as dedup_simhash. */
-  def imagePhashStagePath(sfDir: String): String =
-    Stage.root(sfDir) + "/image_phash_sigs"
-
   /** Image fixture for the NEAR-DUP pass, distinct from [[syntheticPng]]:
     * that family varies between docs only by a brightness constant within
     * each (w,h,ch) size class, so dHash (deliberately brightness-invariant)
@@ -516,15 +511,15 @@ object MultimodalOps {
     * pairs) and `dedup_image_cluster_keep` (which clusters them). */
   def imagePhashPairs(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    Tables.documents(s, d)
+    val sigs = Tables.documents(s, d)
       .select(col("doc_id")).as[Long]
       .mapPartitions(_.map { id =>
         val (hi, lo) = dhash(graft.media.Png.decode(syntheticPngDiverse(id)))
         (id, (hi << 32) | lo)
       })
       .toDF("doc_id", "sig")
-      .write.mode("overwrite").parquet(imagePhashStagePath(d))
-    LlmOps.simhashPairsFromSigs(s.read.parquet(imagePhashStagePath(d)))
+    // the staged (doc_id, sig) table is shared with the all-pairs oracle
+    LlmOps.simhashPairsFromSigs(Stage.put(sigs, Stage.root(d) + "/image_phash_sigs"))
   }
 
   private val imagePairSql =

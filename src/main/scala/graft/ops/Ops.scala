@@ -24,7 +24,9 @@ final case class Op(key: String, fn: (SparkSession, String) => DataFrame, oracle
   * queries wrote. Staged files are deliberately NOT registered with
   * [[Housekeeping]] (releaseAll() between Verify queries would delete them
   * before the oracle pass runs); each run overwrites its own sf's files in
-  * place, so the footprint stays one small artifact set per sf. */
+  * place, so the footprint stays one small artifact set per sf. [[put]] is
+  * the one write-then-read-back round trip: every staged frame comes back
+  * with the schema it was written with. */
 object Stage {
   /** Placeholder the oracle strings carry until Verify knows the sfDir. */
   val token: String = "__GRAFT_STAGE__"
@@ -38,6 +40,15 @@ object Stage {
   }
 
   def resolve(sql: String, sfDir: String): String = sql.replace(token, root(sfDir))
+
+  /** Overwrite-write `df` as parquet at `path`, then read the files back
+    * with `df.schema`, the schema Spark wrote into them, so reopening starts
+    * no footer-inference job. The file count is the caller's: `coalesce(1)`
+    * before the call for a one-file artifact. */
+  def put(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
 }
 
 /** Shared determinism policy (SURVEY.md §7.2). The hash-oracle only matches if

@@ -59,10 +59,7 @@ object PlanSurfaceOps {
     "scan_agg_pushdown",
     (s, d) => {
       val out = Housekeeping.boundedScratch("agg_pd").toString
-      withParquetAggPushdown(s) {
-        aggScan(s, d).coalesce(1).write.mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out)
+      withParquetAggPushdown(s)(Stage.put(aggScan(s, d).coalesce(1), out))
     },
     Some("SELECT COUNT(*) AS n_rows, MIN(l_orderkey) AS min_orderkey, " +
       "MAX(l_orderkey) AS max_orderkey, MIN(l_partkey) AS min_partkey, " +

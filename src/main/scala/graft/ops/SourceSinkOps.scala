@@ -412,7 +412,7 @@ object SourceSinkOps {
     val bytes = live.map(Files.size).sum
     val nFiles = math.max(1, ((bytes + targetFileBytes - 1) / targetFileBytes).toInt)
     val gen = root.resolve(s"compact-v${version + 1}")
-    s.read.parquet(live.map(_.toString): _*)
+    TableManifest.readFiles(s, live)
       .repartitionByRange(nFiles, col("l_orderkey"), col("l_linenumber"))
       .sortWithinPartitions("l_orderkey", "l_linenumber")
       .write.mode("overwrite").parquet(gen.toString)
@@ -534,7 +534,7 @@ object SourceSinkOps {
     // the stats read a manifest would serve at 100 TB: per-file key min/max,
     // gathered in ONE job (grouping by input_file_name) — per-file scans
     // would pay one Spark-job constant per file (measured: 16 files ≈ +1.5 s)
-    val stats = s.read.parquet(live.map(_.toString): _*)
+    val stats = TableManifest.readFiles(s, live)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("l_orderkey")).cast("long").as("mn"),
         max(col("l_orderkey")).cast("long").as("mx"))
@@ -549,7 +549,7 @@ object SourceSinkOps {
       // the rewrite job reads ONLY the touched files; output is a fresh file
       // generation, invisible until the commit rename below
       val gen = root.resolve(s"delete-v${version + 1}")
-      s.read.parquet(touched.map(_._1.toString).toIndexedSeq: _*)
+      TableManifest.readFiles(s, touched.map(_._1).toIndexedSeq)
         .where(col("l_orderkey") < deleteLo || col("l_orderkey") > deleteHi)
         .coalesce(math.max(1, touched.length))
         .write.mode("overwrite").parquet(gen.toString)
@@ -1239,7 +1239,7 @@ object SourceSinkOps {
       // can't infer a schema from zero files, so carry it explicitly — the
       // same guard as the IVF cellFileProbe's all-cells-vacant state
       val pruned =
-        if (files.nonEmpty) s.read.parquet(files.map(_.toString): _*)
+        if (files.nonEmpty) TableManifest.readFiles(s, files)
         else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.StructType.fromDDL(
             "l_orderkey BIGINT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +

@@ -58,10 +58,9 @@ object StatsOps {
     "stats_collect",
     (s, d) => {
       val out = Housekeeping.boundedScratch("graft_stats").toString
-      statCols.map { case (t, cols) => tableStats(s, d, t, cols) }
-        .reduce(_.unionAll(_))
-        .coalesce(1).write.mode("overwrite").parquet(out)
-      s.read.parquet(out).orderBy("table_name", "column_name")
+      Stage.put(statCols.map { case (t, cols) => tableStats(s, d, t, cols) }
+        .reduce(_.unionAll(_)).coalesce(1), out)
+        .orderBy("table_name", "column_name")
     },
     Some(statCols.flatMap { case (t, cols) =>
       cols.map(c =>
@@ -195,8 +194,6 @@ object StatsOps {
   private val CmsD = 4
   private val CmsW = 64
 
-  def cmsStagePath(sfDir: String): String = Stage.root(sfDir) + "/cms_claims"
-
   val statsCountminEstimate: Op = Op(
     "stats_countmin_estimate",
     (s, d) => {
@@ -204,8 +201,7 @@ object StatsOps {
       val claims = events.select("user_id").distinct()
         .select(col("user_id"), explode(sequence(lit(0), lit(CmsD - 1))).as("r"))
         .withColumn("c", pmod(xxhash64(col("user_id"), col("r")), lit(CmsW)).cast("int"))
-      claims.coalesce(1).write.mode("overwrite").parquet(cmsStagePath(d))
-      val cl = s.read.parquet(cmsStagePath(d))
+      val cl = Stage.put(claims.coalesce(1), Stage.root(d) + "/cms_claims")
       val exact = events.groupBy("user_id").agg(count(lit(1)).as("n_exact"))
       val ctr = cl.join(exact, "user_id").groupBy("r", "c").agg(sum("n_exact").as("cnt"))
       val est = cl.join(ctr, Seq("r", "c")).groupBy("user_id").agg(min("cnt").as("n_est"))
@@ -265,14 +261,13 @@ object StatsOps {
         .withColumn("rn", row_number().over(
           Window.partitionBy("day").orderBy("rk", "event_id")))
         .where(col("rn") <= BkK)
-      val stageDir = Stage.root(d) + "/bottomk_daily"
-      daily.coalesce(1).write.mode("overwrite").parquet(stageDir)
+      val staged = Stage.put(daily.coalesce(1), Stage.root(d) + "/bottomk_daily")
       // the range query: trailing window (all days after the first three),
       // answered from the standing daily samples alone
       val lo = java.sql.Date.valueOf(
-        s.read.parquet(stageDir).agg(min(col("day"))).first().getDate(0)
+        staged.agg(min(col("day"))).first().getDate(0)
           .toLocalDate.plusDays(3))
-      val merged = s.read.parquet(stageDir)
+      val merged = staged
         .where(col("day") >= lit(lo))
         .withColumn("rn2", row_number().over(Window.orderBy("rk", "event_id")))
         .where(col("rn2") <= BkK)

@@ -53,7 +53,6 @@ object SubqueryOps {
       "WHERE o_totalprice > 1.5 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) FROM orders) " +
       "ORDER BY o_orderkey"))
 
-  def pctStagePath(sfDir: String): String = Stage.root(sfDir) + "/pct_est"
 
   /** Approximate percentiles (GK sketch) — the warehouse staple for latency/
     * load distributions. Sketch internals are engine-specific, so the hash
@@ -73,11 +72,10 @@ object SubqueryOps {
         .agg(
           percentile_approx(col("o_totalprice"), lit(0.5), lit(1000)).as("p50"),
           percentile_approx(col("o_totalprice"), lit(0.95), lit(1000)).as("p95"))
-      est.coalesce(1).write.mode("overwrite").parquet(pctStagePath(d))
+      val staged = Stage.put(est.coalesce(1), Stage.root(d) + "/pct_est")
       val cnt = Tables.orders(s, d)
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("cnt"))
-      s.read.parquet(pctStagePath(d))
-        .join(cnt, "o_orderpriority")
+      staged.join(cnt, "o_orderpriority")
         .select(col("o_orderpriority"), col("p50"), col("p95"), col("cnt"))
         .orderBy("o_orderpriority")
     },

@@ -73,14 +73,28 @@ object TableManifest {
 
   /** Read the table AS OF the current manifest — the only sanctioned read
     * path for a manifest-committed table. Reads exactly the live files the
-    * manifest lists (never a directory listing) and infers the schema from
-    * their parquet footers. An empty live set is a legal table state
-    * (fully-deleted table), but Spark cannot infer a schema from zero
-    * files, so reading one fails with Spark's "unable to infer schema"
-    * AnalysisException. */
-  def readTable(s: SparkSession, root: Path): DataFrame = {
-    val (_, files) = read(root)
-    s.read.parquet(files.map(_.toString): _*)
+    * manifest lists (never a directory listing) through [[readFiles]], so
+    * the schema comes from the first file's footer and opening the table
+    * starts no job. An empty live set is a legal table state
+    * (fully-deleted table) but has no footer to take a schema from, so
+    * reading one fails [[readFiles]]'s `require`. */
+  def readTable(s: SparkSession, root: Path): DataFrame = readFiles(s, read(root)._2)
+
+  /** The one reader of manifest-listed files: `files` read with the Spark
+    * schema the writer stored in `files.head`'s footer (the
+    * `org.apache.spark.sql.parquet.row.metadata` key, the same one Spark's
+    * own inference reads), so no footer-inference job runs. Every file a
+    * manifest lists is Spark-written by this engine, so a missing key is a
+    * foreign file and fails loudly rather than falling back to inference.
+    * Callers keep their own empty-list branch. */
+  def readFiles(s: SparkSession, files: Seq[Path]): DataFrame = {
+    require(files.nonEmpty, "readFiles: no files to take a schema from")
+    val json = footer(files.head).getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    require(json != null, s"readFiles: no Spark schema in the footer of ${files.head}")
+    s.read.schema(org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .parquet(files.map(_.toString): _*)
   }
 
   /** File list of the immutable `_manifest-v{N}` snapshot — the ONE parser
@@ -104,7 +118,7 @@ object TableManifest {
   /** Snapshot AS OF a past version, from its immutable `_manifest-v{N}`
     * log entry. Valid until [[vacuum]] reclaims the version's files. */
   def readTableAsOf(s: SparkSession, root: Path, version: Long): DataFrame =
-    s.read.parquet(filesAsOf(root, version).map(_.toString): _*)
+    readFiles(s, filesAsOf(root, version))
 
   private val commitLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -286,33 +300,33 @@ object TableManifest {
     }
   }
 
-  /** Per-file [min, max] of one INT64 column read from parquet FOOTERS —
-    * metadata-only stats collection (no scan tasks, no data pages): how a
-    * production writer populates manifest zone maps without re-reading the
-    * data it just wrote (Delta and Iceberg ingest exactly these footer
-    * statistics into their manifests). A file whose footer carries no
-    * statistics for the column (e.g. zero rows) is omitted from the map —
-    * [[pruneForPoints]]/[[filesForRange]] keep uncovered files
-    * conservatively, so omission is always safe. */
-  def footerLongStats(files: Seq[Path], statsCol: String): Map[Path, (Long, Long)] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    files.flatMap { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), conf))
-      try {
-        val sts = r.getFooter.getBlocks.asScala
-          .flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == statsCol)
-          .map(_.getStatistics)
-          .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
-        if (sts.isEmpty) None
-        else Some(f -> (
-          sts.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
-          sts.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max))
-      } finally r.close()
-    }.toMap
+  /** One parquet file's footer (metadata only, no data pages). */
+  private def footer(f: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration()))
+    try r.getFooter finally r.close()
   }
+
+  /** Per-file row count and [min, max] of one INT64 column, read from
+    * parquet FOOTERS in one walk — metadata-only stats collection (no scan
+    * tasks, no data pages): how a production writer populates manifest
+    * zone maps without re-reading the data it just wrote (Delta and
+    * Iceberg ingest exactly these footer statistics into their manifests).
+    * A file whose footer carries no statistics for the column (e.g. zero
+    * rows) gets `None` — [[pruneForPoints]]/[[filesForRange]] keep
+    * uncovered files conservatively, so omission is always safe. */
+  def footerLongStats(files: Seq[Path], statsCol: String): Seq[(Path, Long, Option[(Long, Long)])] =
+    files.map { f =>
+      val blocks = footer(f).getBlocks.asScala
+      val sts = blocks.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == statsCol)
+        .map(_.getStatistics)
+        .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
+      (f, blocks.map(_.getRowCount).sum, Option.when(sts.nonEmpty)((
+        sts.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+        sts.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)))
+    }
 
   /** Remove data files no longer referenced by the current manifest (the
     * explicit, reader-visible-state-preserving cleanup). Returns the number

@@ -82,7 +82,7 @@ object TextOps {
 
   /** sf-scoped staging path for the positional rolling-hash table — written
     * by the query, read by the DuckDB oracle (same [[Stage]] lifecycle as
-    * LlmOps.simhashStagePath; deliberately outside Housekeeping). */
+    * dedup_simhash's signature table; deliberately outside Housekeeping). */
   def fingerprintStagePath(sfDir: String): String =
     Stage.root(sfDir) + "/fingerprint_hashes"
 

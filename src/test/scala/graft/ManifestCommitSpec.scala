@@ -3,6 +3,7 @@ package graft
 import graft.ops.{SourceSinkOps, TableManifest}
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBus
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -156,6 +157,21 @@ class ManifestCommitSpec extends AnyFunSuite {
       assert(TableManifest.read(root)._1 == 3)
       assert(TableManifest.readTable(spark, root).as[Long].collect().toSet ==
         (1L to 70L).toSet, "rebased retry must see both writers' rows")
+    } finally graft.ops.Housekeeping.deleteRecursively(root)
+  }
+
+  test("reading a manifest table starts no Spark job") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("manifest_open_spec")
+    try {
+      val gen1 = root.resolve("gen1")
+      (1L to 100L).map(i => (i, s"r$i")).toDF("k", "s").repartition(4)
+        .write.parquet(gen1.toString)
+      TableManifest.commit(root, 1, TableManifest.parquetFiles(gen1))
+      val (table, opening) = ListenerBus.jobsStarted(spark.sparkContext)(
+        TableManifest.readTable(spark, root))
+      assert(opening == 0, s"$opening jobs started while opening the table")
+      assert(table.count() == 100L)
     } finally graft.ops.Housekeeping.deleteRecursively(root)
   }
 

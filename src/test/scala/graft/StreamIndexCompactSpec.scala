@@ -49,6 +49,19 @@ class StreamIndexCompactSpec extends AnyFunSuite {
     root
   }
 
+  test("an empty generation commits a version with no new file") {
+    val root = buildStanding(200L, 2)
+    try {
+      val (v, files) = TableManifest.read(root)
+      val empty = spark.range(0).select(col("id").as("doc_id"), col("id").as("v"))
+      StreamingOps.commitClusteredGen(empty, s"$root/b$v", root, v + 1, "doc_id",
+        files, TableManifest.statsOf(root, v), parts = 2)
+      assert(TableManifest.read(root) == (v + 1, files),
+        "the empty generation's zero-row part file reached the manifest")
+      assert(TableManifest.statsOf(root, v + 1).keySet == files.toSet)
+    } finally Housekeeping.deleteRecursively(root)
+  }
+
   test("snapshot isolation: a pinned pre-compaction reader sees its exact " +
     "snapshot across the commit; vacuum reclaims only superseded files") {
     val root = buildStanding(2000L, 8)
