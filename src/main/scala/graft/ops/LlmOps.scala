@@ -409,47 +409,45 @@ object LlmOps {
     * to ~10¹⁰ pairs. */
   val NgramMaxDf = 100
 
-  /** Exploded (doc_id, shingle) rows — the shared shingling of every dedup
-    * op, exposed (with [[NgramMaxDf]]) for DedupScaleSpec's work-count
-    * assertions over the shingle document-frequency table.
+  /** Exploded shingle occurrences: one `(…, s)` row per distinct word
+    * 3-gram of each document, keeping every column of `docs` but `text`
+    * (`doc_id`, plus `source` or `is_std` where a caller carries them). The
+    * one shingle explode of the batch ops; the per-doc shingle arrays are
+    * cached under `key` ([[Housekeeping.cacheBounded]]) before the explode.
     *
-    * CAUTION (measured in ngramPairs, §7.2): exploding an UNCACHED shingle
-    * array lets InferFiltersFromGenerate re-derive the whole O(words²)
-    * shingle tree inside the injected not-null/size filter. Consumers that
-    * explode more than trivially should cache [[shingleArrays]] first. */
-  def shingleRows(docs: DataFrame): DataFrame =
-    shingled(docs.select("doc_id", "text"))
-      .select(col("doc_id"), explode(col("shingles")).as("s"))
+    * That cache is not optional. Catalyst's InferFiltersFromGenerate injects
+    * a `size(shingles) > 0 AND isnotnull(shingles)` filter under the
+    * `Generate`, and without the cache barrier that filter re-derives the
+    * whole shingle tree with `split(text)` inlined into every element_at —
+    * an O(words²)-per-doc blowup, paid again by every plan branch that reads
+    * the rows. Measured: 12× on the Jaccard query at sf0.1, and 4.5 s + 4.2 s
+    * → under 1 s for the two incremental eval dictionaries of
+    * `pipeline_incremental_update`. Against the cached array the injected
+    * filter is O(1), and a filter on a kept column pushes below the explode
+    * onto the cache. NearDupSpec checks this plan shape. */
+  def shingleOccurrences(key: String, docs: DataFrame): DataFrame = {
+    val arr = Housekeeping.cacheBounded(key, shingled(docs).drop("text", "words"))
+    arr.select(arr.columns.filter(_ != "shingles").map(col).toSeq :+
+      explode(col("shingles")).as("s"): _*)
+  }
 
-  /** Per-doc distinct shingle ARRAYS (doc_id, shingles) — the cache-barrier
-    * form consumers should materialize before exploding (see the
-    * InferFiltersFromGenerate note on [[shingleRows]]). */
+  /** Per-doc distinct shingle ARRAYS (doc_id, shingles), uncached — for the
+    * streaming folds, which cache and unpersist each micro-batch's arrays
+    * themselves (see [[shingleOccurrences]] for why a cache must sit between
+    * these arrays and any explode). */
   def shingleArrays(docs: DataFrame): DataFrame =
     shingled(docs.select("doc_id", "text")).select(col("doc_id"), col("shingles"))
 
-  /** Exact n-gram Jaccard near-dedup — fully relational (shingle-array per
-    * doc → explode → document-frequency cutoff → equi-join on shingle →
-    * shared counts → Jaccard), so the oracle can mirror it with DuckDB list
-    * lambdas.
-    *
-    * The per-doc shingle ARRAY (not the exploded rows) is what's cached:
-    * Catalyst's InferFiltersFromGenerate injects a
-    * `size(shingles)>0 AND isnotnull(shingles)` filter under the explode, and
-    * without the cache barrier that filter re-derives the whole shingle tree
-    * with `split(text)` inlined into every element_at — an O(words²)-per-doc
-    * blowup (measured 12× on this query at sf0.1). Against the materialized
-    * array the injected filter is O(1), and per-doc sizes come straight from
-    * `size(shingles)` with no shuffle. */
-  /** (doc_a, doc_b, jaccard) near-dup pairs at threshold 0.5 — the shared
-    * core of `dedup_ngram_jaccard` (which just orders it) and
-    * `dedup_cluster_keep` (which runs connected components over it); takes
-    * the documents frame directly so DedupScaleSpec can drive it with a
-    * synthetic boilerplate corpus. */
-  def ngramPairs(docs: DataFrame): DataFrame = {
-    val base = Housekeeping.cacheBounded("ngram_shingles",
-      shingled(docs.select("doc_id", "text"))
-        .select(col("doc_id"), col("shingles")))
-    val exploded = base.select(col("doc_id"), explode(col("shingles")).as("s"))
+  /** The cool-shingle overlap stage of the exact pair rules ([[ngramPairs]],
+    * [[containmentPairs]]): `(doc_a, doc_b, inter, na, nb)` for every
+    * `doc_a < doc_b` sharing a shingle of df ≤ [[NgramMaxDf]], with the
+    * shared count and both documents' cool-shingle set sizes. Relational
+    * end to end (explode → df cutoff → equi-join on shingle → shared counts),
+    * so the oracle mirrors it with DuckDB list lambdas ([[coolShingleCtes]]).
+    * The intersection is symmetric, so each unordered pair is enumerated
+    * once; a directed rule mirrors each row itself. */
+  private def coolOverlap(docs: DataFrame): DataFrame = {
+    val occ = shingleOccurrences("overlap_shingles", docs.select("doc_id", "text"))
     // df-cutoff: the skew guard — see NgramMaxDf. One groupBy over the
     // exploded rows; then the occurrences are filtered by ANTI-joining the
     // HOT set (df > cutoff) rather than inner-joining the COOL set: by Zipf,
@@ -465,34 +463,48 @@ object LlmOps {
     // and explode of the non-null array yields non-null elements).
     // The cutoff result feeds THREE plan branches (per-doc sizes + both
     // sides of the self-join): materialize it once or the explode + groupBy
-    // + anti-join subtree executes three times (same plan-branch recompute
-    // trap as the shingle arrays themselves, one level up).
-    val sh = Housekeeping.cacheBounded("ngram_cool",
-      exploded.join(
-        exploded.groupBy("s").agg(count(lit(1)).as("df")).where(col("df") > NgramMaxDf)
+    // + anti-join subtree executes three times.
+    val sh = Housekeeping.cacheBounded("overlap_cool",
+      occ.join(
+        occ.groupBy("s").agg(count(lit(1)).as("df")).where(col("df") > NgramMaxDf)
           .select("s"), Seq("s"), "left_anti"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"),
+    sh.as("a").join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .select("doc_a", "doc_b", "inter", "na", "nb")
+  }
+
+  /** (doc_a, doc_b, jaccard) near-dup pairs at threshold 0.5 — the
+    * [[coolOverlap]] stage plus the Jaccard rule, and the shared core of
+    * `dedup_ngram_jaccard` (which just orders it) and `dedup_cluster_keep`
+    * (which runs connected components over it); takes the documents frame
+    * directly so DedupScaleSpec can drive it with a synthetic boilerplate
+    * corpus. */
+  def ngramPairs(docs: DataFrame): DataFrame =
+    coolOverlap(docs)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= 0.5)
       .select("doc_a", "doc_b", "jaccard")
-  }
 
-  /** The oracle-side spelling of [[ngramPairs]], as CTEs ending in
-    * `j(doc_a, doc_b, jaccard)` — shared by the two ops the same way. */
-  private val ngramPairCtes: String =
+  /** The oracle-side spelling of [[coolOverlap]]'s inputs, as CTEs ending in
+    * `g(doc_id, s)` (the cool occurrences) and `sz(doc_id, n)` (their
+    * per-doc sizes) — the prefix both pair rules' oracles share. */
+  private val coolShingleCtes: String =
     "t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
       "g0 AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(w) - 2), " +
       "i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s FROM t WHERE len(w) >= 3), " +
       s"g AS (SELECT doc_id, s FROM g0 WHERE s IN (SELECT s FROM g0 GROUP BY 1 HAVING COUNT(*) <= $NgramMaxDf)), " +
-      "sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY 1), " +
+      "sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY 1)"
+
+  /** The oracle-side spelling of [[ngramPairs]], as CTEs ending in
+    * `j(doc_a, doc_b, jaccard)` — shared by the ops that consume the pairs. */
+  private val ngramPairCtes: String =
+    coolShingleCtes + ", " +
       "p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter FROM g a " +
       "JOIN g b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2), " +
       "j AS (SELECT doc_a, doc_b, CAST(inter AS DOUBLE) / (na.n + nb.n - inter) AS jaccard " +
@@ -556,17 +568,12 @@ object LlmOps {
   val dedupDecontaminate: Op = Op(
     "dedup_decontaminate",
     (s, d) => {
-      // Materialize the shingle arrays once: they feed THREE plan branches
-      // (bench dictionary, per-doc sizes, hit join) and uncached each branch
-      // re-derives the whole split/transform tree — the same measured
-      // recompute trap as ngramPairs (cache barrier pattern, §7.2).
-      val sh = Housekeeping.cacheBounded("decon_shingles",
-        shingled(Tables.documents(s, d).select("doc_id", "source", "text"))
-          .select(col("doc_id"), col("source"), col("shingles")))
-      val bench = sh.where(col("source") === "src0")
-        .select(explode(col("shingles")).as("s")).distinct()
-      val train = sh.where(col("source") =!= "src0")
-        .select(col("doc_id"), explode(col("shingles")).as("s"))
+      // one cached shingling feeds THREE plan branches (bench dictionary,
+      // per-doc sizes, hit join)
+      val sh = shingleOccurrences("decon_shingles",
+        Tables.documents(s, d).select("doc_id", "source", "text"))
+      val bench = sh.where(col("source") === "src0").select("s").distinct()
+      val train = sh.where(col("source") =!= "src0").select("doc_id", "s")
       val hits = train.join(broadcast(bench), "s")
         .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
       train.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
@@ -2389,61 +2396,37 @@ object LlmOps {
     * both directions, flag at containment ≥ 80 %. All integer arithmetic
     * (`(100·inter) div nA`) — no float reaches the hash.
     *
-    * Scale: identical cost shape to [[ngramPairs]] — shingle-inverted-index
-    * equi-join bounded by the df cutoff (≤ df² pair rows per shingle), one
-    * groupBy; never all-pairs. At 100 TB the cutoff is the skew guard and
-    * the join keys are the hashed shingles. */
-  /** The containment core over a (doc_id, text) frame — exposed so the spec
+    * Scale: the [[ngramPairs]] cost shape — one [[coolOverlap]] stage, a
+    * shingle-inverted-index equi-join bounded by the df cutoff (≤ df² pair
+    * rows per shingle) and one groupBy; never all-pairs. The stage counts
+    * each unordered pair once (the intersection is symmetric) and a
+    * shuffle-free two-row explode mirrors each row into both orientations
+    * (guide §2.3), so the stage's plan runs once: a union of two
+    * projections prunes each branch's columns differently, which defeats
+    * exchange reuse (measured 17 → 26 jobs at sf0.001). Exposed so the spec
     * can drive it with a planted subset-document fixture. */
   def containmentPairs(docs: DataFrame, minPct: Long = 80L): DataFrame = {
-    val base = Housekeeping.cacheBounded("cont_shingles",
-      shingled(docs.select("doc_id", "text"))
-        .select(col("doc_id"), col("shingles")))
-    val exploded = base.select(col("doc_id"), explode(col("shingles")).as("s"))
-    // HOT-set anti-join instead of cool-set inner join — see [[ngramPairs]]
-    // (identical rows kept; the join's small side shrinks to the Zipf head).
-    // Row-identity relies on `s` never being null (left_anti keeps
-    // null-keyed rows) — guaranteed by shingle construction, see ngramPairs.
-    val sh = Housekeeping.cacheBounded("cont_cool",
-      exploded.join(
-        exploded.groupBy("s").agg(count(lit(1)).as("df"))
-          .where(col("df") > NgramMaxDf).select("s"), Seq("s"), "left_anti"))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("na"))
-    // |sh(A) ∩ sh(B)| is SYMMETRIC: enumerate each unordered pair once
-    // (doc_a < doc_b — half the join output and aggregate input) and mirror
-    // the counted row afterward — a shuffle-free union — instead of letting
-    // the self-join emit both orientations (guide §2.3).
-    // the mirror union references interLo twice, but the expensive subtree
-    // (self-join + partial agg) sits BELOW interLo's final exchange, which
-    // AQE stage reuse deduplicates across the two branches — an explicit
-    // materialization barrier here measured SLOWER (extra eager job)
-    val interLo = sh.as("a").join(sh.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    interLo.unionByName(interLo.select(col("doc_b").as("doc_a"),
-        col("doc_a").as("doc_b"), col("inter")))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("na")), "doc_a")
+    coolOverlap(docs)
+      .select(explode(array(
+        struct(col("doc_a"), col("doc_b"), col("na"), col("inter")),
+        struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"), col("nb").as("na"),
+          col("inter")))).as("o"))
+      .select("o.*")
       .withColumn("containment_pct", expr("(100 * inter) div na"))
       .where(col("containment_pct") >= minPct)
-      .select(col("doc_a"), col("doc_b"), col("na"), col("inter"),
-        col("containment_pct"))
       .orderBy("doc_a", "doc_b")
   }
 
   val dedupContainment: Op = Op(
     "dedup_containment",
     (s, d) => containmentPairs(Tables.documents(s, d)),
-    Some("WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
-      "g0 AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(w) - 2), " +
-      "i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s FROM t WHERE len(w) >= 3), " +
-      s"g AS (SELECT doc_id, s FROM g0 WHERE s IN (SELECT s FROM g0 GROUP BY 1 HAVING COUNT(*) <= $NgramMaxDf)), " +
-      "sz AS (SELECT doc_id, COUNT(*) AS na FROM g GROUP BY 1), " +
+    // its own `<>` pair CTE, so the reference checks the mirror independently
+    Some(s"WITH $coolShingleCtes, " +
       "p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter FROM g a " +
       "JOIN g b ON a.s = b.s AND a.doc_id <> b.doc_id GROUP BY 1, 2) " +
-      "SELECT doc_a, doc_b, sz.na, inter, (100 * inter) // sz.na AS containment_pct " +
+      "SELECT doc_a, doc_b, sz.n AS na, inter, (100 * inter) // sz.n AS containment_pct " +
       "FROM p JOIN sz ON sz.doc_id = doc_a " +
-      "WHERE (100 * inter) // sz.na >= 80 ORDER BY doc_a, doc_b"))
+      "WHERE (100 * inter) // sz.n >= 80 ORDER BY doc_a, doc_b"))
 
   /** Character-level near-dup detection by EDIT DISTANCE — the family
     * member token-level MinHash/SimHash miss: small in-word typos and

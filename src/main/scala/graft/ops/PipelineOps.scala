@@ -171,6 +171,19 @@ object PipelineOps {
       "FROM (SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens " +
       "FROM documents)) ORDER BY doc_id"))
 
+  /** The int8 quantization prefix shared by the embedding keys: `v` is the
+    * embedding cast exactly to doubles and `scale` = 127 / max|v| (0.0 for
+    * an all-zero vector); each key then quantizes a coordinate x as
+    * floor(x·scale + 0.5). max|v| is the larger absolute extreme, which
+    * codegens where a `transform` lambda would fall back to interpretation;
+    * both spellings give the same value. */
+  private def int8Scaled(embeddings: DataFrame): DataFrame =
+    embeddings
+      .withColumn("v", col("embedding").cast("array<double>"))
+      .withColumn("maxabs", greatest(abs(array_max(col("v"))), abs(array_min(col("v")))))
+      .withColumn("scale",
+        when(col("maxabs") === 0, lit(0.0)).otherwise(lit(127.0) / col("maxabs")))
+
   /** Symmetric per-vector int8 quantization — the embedding-prep step before
     * a vector-index load or a memory-tight training run: scale each vector by
     * 127/max|x| and round to signed bytes. Scan-local and codegen-friendly
@@ -182,11 +195,7 @@ object PipelineOps {
   val embedQuantizeInt8: Op = Op(
     "embed_quantize_int8",
     (s, d) => {
-      Tables.embeddings(s, d)
-        .withColumn("v", transform(col("embedding"), x => x.cast("double")))
-        .withColumn("maxabs", array_max(transform(col("v"), x => abs(x))))
-        .withColumn("scale",
-          when(col("maxabs") === 0, lit(0.0)).otherwise(lit(127.0) / col("maxabs")))
+      int8Scaled(Tables.embeddings(s, d))
         .select(col("vec_id"), col("scale"),
           concat_ws("|", transform(col("v"),
             x => floor(x * col("scale") + 0.5).cast("int").cast("string"))).as("q"))
@@ -217,11 +226,7 @@ object PipelineOps {
     "embed_random_projection",
     (s, d) => {
       val OutDims = 16
-      val q = Tables.embeddings(s, d)
-        .withColumn("v", transform(col("embedding"), x => x.cast("double")))
-        .withColumn("maxabs", array_max(transform(col("v"), x => abs(x))))
-        .withColumn("scale",
-          when(col("maxabs") === 0, lit(0.0)).otherwise(lit(127.0) / col("maxabs")))
+      val q = int8Scaled(Tables.embeddings(s, d))
         .select(col("vec_id"),
           posexplode(transform(col("v"),
             x => floor(x * col("scale") + 0.5).cast("long"))).as(Seq("i", "qi")))
@@ -265,11 +270,7 @@ object PipelineOps {
   val embedGramExact: Op = Op(
     "embed_gram_exact",
     (s, d) => {
-      val q = Tables.embeddings(s, d)
-        .withColumn("v", transform(col("embedding"), x => x.cast("double")))
-        .withColumn("maxabs", array_max(transform(col("v"), x => abs(x))))
-        .withColumn("scale",
-          when(col("maxabs") === 0, lit(0.0)).otherwise(lit(127.0) / col("maxabs")))
+      val q = int8Scaled(Tables.embeddings(s, d))
         .select(col("vec_id"),
           posexplode(expr("transform(v, x -> cast(floor(x * scale + 0.5) as bigint))")))
         .select(col("vec_id"), (col("pos") + 1).as("i"), col("col").as("q"))
@@ -335,15 +336,10 @@ object PipelineOps {
       // stage 3: training pool = survivors outside the eval source,
       // decontaminated against the RAW src0 shingle dictionary
       val pool = q.join(keep, "doc_id").where(col("source") =!= "src0")
-      // cache the shingle ARRAYS before exploding (the
-      // InferFiltersFromGenerate recompute trap — see LlmOps.shingleRows)
-      val poolArr = Housekeeping.cacheBounded("pipeline_sh",
-        graft.ops.LlmOps.shingleArrays(pool.select("doc_id", "text")))
-      val poolSh = poolArr.select(col("doc_id"), explode(col("shingles")).as("s"))
-      val benchArr = Housekeeping.cacheBounded("pipeline_bench_sh",
-        graft.ops.LlmOps.shingleArrays(
-          docs.where(col("source") === "src0").select("doc_id", "text")))
-      val bench = benchArr.select(explode(col("shingles")).as("s")).distinct()
+      val poolSh = LlmOps.shingleOccurrences("pipeline_sh", pool.select("doc_id", "text"))
+      val bench = LlmOps.shingleOccurrences("pipeline_bench_sh",
+          docs.where(col("source") === "src0").select("doc_id", "text"))
+        .select("s").distinct()
         .withColumn("hit", lit(1))
       // ONE exploded pass: the broadcast LEFT join marks hits while the same
       // groupBy counts shingles (r13 — the shape the incremental sibling
@@ -503,20 +499,14 @@ object PipelineOps {
       val poolStd = qStd.join(keepStd, "doc_id").where(col("source") =!= "src0")
       val poolDel = qDel.join(keepDel, "doc_id").where(col("source") =!= "src0")
       // eval dictionaries: standing, plus ONLY what the delta added. ONE
-      // src0 shingle-ARRAY cache feeds both — the cache is the mandatory
-      // barrier between shingleArrays and explode (InferFiltersFromGenerate
-      // otherwise re-derives the whole shingle tree inside the injected
-      // size()>0 filter, the documented O(words²)-per-doc trap: measured
-      // 4.5 s + 4.2 s for these two ~10k-shingle dictionaries at sf0.1
-      // without the barrier, <1 s with it)
-      val srcArr = Housekeeping.cacheBounded("inc_bench_arr",
-        graft.ops.LlmOps.shingleArrays(
-            docs.where(col("source") === "src0").select("doc_id", "text"))
+      // cached src0 shingling feeds both (the is_std filters push below the
+      // explode onto the cache)
+      val srcSh = LlmOps.shingleOccurrences("inc_bench_arr",
+        docs.where(col("source") === "src0").select("doc_id", "text")
           .withColumn("is_std", col("doc_id") <= mid))
       val benchStd = Housekeeping.cacheBounded("inc_bench_std",
-        srcArr.where(col("is_std")).select(explode(col("shingles")).as("s")).distinct())
-      val benchNew = srcArr.where(!col("is_std"))
-        .select(explode(col("shingles")).as("s")).distinct()
+        srcSh.where(col("is_std")).select("s").distinct())
+      val benchNew = srcSh.where(!col("is_std")).select("s").distinct()
         .join(benchStd, Seq("s"), "left_anti")
       // The additive-hits identity (hits(standing dict) + hits(benchNew) =
       // hits(full dict), the two dictionaries being disjoint by benchNew's
@@ -536,11 +526,7 @@ object PipelineOps {
       // unions the cleans anyway)
       val pool = Housekeeping.cacheBounded("inc_pool",
         poolStd.unionByName(poolDel).select("doc_id", "text", "n_chars"))
-      // same explode barrier for the pool side
-      val poolArr = Housekeeping.cacheBounded("inc_pool_arr",
-        graft.ops.LlmOps.shingleArrays(pool.select("doc_id", "text")))
-      val stats = poolArr
-        .select(col("doc_id"), explode(col("shingles")).as("s"))
+      val stats = LlmOps.shingleOccurrences("inc_pool_arr", pool.select("doc_id", "text"))
         .join(broadcast(evalDict), Seq("s"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n"), count(col("hit")).as("nh"))
@@ -803,11 +789,7 @@ object PipelineOps {
   val embedCentroidOutliers: Op = Op(
     "embed_centroid_outliers",
     (s, d) => {
-      val q = Tables.embeddings(s, d)
-        .withColumn("v", transform(col("embedding"), x => x.cast("double")))
-        .withColumn("maxabs", array_max(transform(col("v"), x => abs(x))))
-        .withColumn("scale",
-          when(col("maxabs") === 0, lit(0.0)).otherwise(lit(127.0) / col("maxabs")))
+      val q = int8Scaled(Tables.embeddings(s, d))
         .select(col("vec_id"), col("label"),
           posexplode(expr("transform(v, x -> cast(floor(x * scale + 0.5) as bigint))")))
         .select(col("vec_id"), col("label"), col("pos").as("i"), col("col").as("q"))
@@ -868,11 +850,7 @@ object PipelineOps {
   val embedCentroidClassify: Op = Op(
     "embed_centroid_classify",
     (s, d) => {
-      val q = Tables.embeddings(s, d)
-        .withColumn("v", transform(col("embedding"), x => x.cast("double")))
-        .withColumn("maxabs", array_max(transform(col("v"), x => abs(x))))
-        .withColumn("scale",
-          when(col("maxabs") === 0, lit(0.0)).otherwise(lit(127.0) / col("maxabs")))
+      val q = int8Scaled(Tables.embeddings(s, d))
         .select(col("vec_id"), col("label"),
           posexplode(expr("transform(v, x -> cast(floor(x * scale + 0.5) as bigint))")))
         .select(col("vec_id"), col("label"), col("pos").as("i"), col("col").as("q"))

@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import Dets._
 
 import java.nio.file.{Files, Path, Paths}
+import java.time.{LocalDateTime, ZoneOffset}
 
 /** SURVEY.md §2 category J — Structured Streaming restatement of the
   * reference's ingest reality (late, duplicated gateway uploads).
@@ -91,10 +92,22 @@ object StreamingOps {
       .agg(max(col("cnt")).as("cnt"), max_by(col("sum_value"), col("cnt")).as("sum_value"))
       .orderBy("user_id")
 
-  /** Exact integer midpoint of an epoch-micros column: one bounds job. */
-  private def midpointMicros(df: DataFrame, usCol: Column): Long = {
-    val b = df.agg(min(usCol), max(usCol)).first()
-    b.getLong(0) / 2 + b.getLong(1) / 2
+  /** The split point of the two-delivery keys: the exact integer midpoint
+    * of `events.ts`, taken from the parquet footers' min/max statistics, so
+    * no Spark job runs. `ts` is stored as TIMESTAMP_NTZ micros; under the
+    * pinned UTC session the midpoint equals that of `unix_micros` over the
+    * NTZ→LTZ cast. */
+  private[graft] def tsMidpoint(d: String): LocalDateTime = {
+    val bounds = TableManifest.footerLongStats(
+        TableManifest.parquetFiles(Paths.get(s"$d/events.parquet")), "ts")
+      .collect { case (f, rows, mm) if rows > 0 =>
+        require(mm.isDefined, s"$f carries no footer min/max statistics for ts")
+        mm.get
+      }
+    require(bounds.nonEmpty, s"$d/events.parquet holds no rows")
+    val us = bounds.map(_._1).min / 2 + bounds.map(_._2).max / 2
+    LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+      (Math.floorMod(us, 1000000L) * 1000L).toInt, ZoneOffset.UTC)
   }
 
   /** Streaming state-store partition sizing. A stateful query creates one
@@ -529,14 +542,11 @@ object StreamingOps {
     "stream_restart_exactly_once",
     (s, d) => {
       val out = Housekeeping.boundedScratch("st_restart_out").toString
-      // split point computed on epoch-micros longs (exact integer midpoint;
-      // the NTZ→LTZ cast is value-identical under the pinned UTC session)
       val raw = graft.tables.Tables.rawEvents(s, d)
-        .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
-      val cut = midpointMicros(raw, col("ts_us"))
-      val d1 = raw.where(col("ts_us") <= cut).drop("ts_us")
+      val cut = lit(tsMidpoint(d))
+      val d1 = raw.where(col("ts") <= cut)
       // re-upload slice: every 10th event of delivery 1, resent in delivery 2
-      val d2 = raw.where(col("ts_us") > cut).drop("ts_us")
+      val d2 = raw.where(col("ts") > cut)
         .unionAll(d1.where(col("event_id") % 10 === 0))
       streamDirs("st_restart") { (srcDir, ckpt) =>
         def run(): Unit = withStatePartitions(s) {
@@ -582,8 +592,7 @@ object StreamingOps {
     (s, d) => {
       val outRoot = Housekeeping.boundedScratch("st_upsert_out").toString
       val raw = graft.tables.Tables.rawEvents(s, d)
-        .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
-      val cut = midpointMicros(raw, col("ts_us"))
+      val cut = lit(tsMidpoint(d))
       val ver = new java.util.concurrent.atomic.AtomicInteger(0)
       def latest(df: DataFrame): DataFrame = df
         .groupBy("user_id")
@@ -591,8 +600,8 @@ object StreamingOps {
         .select(col("user_id"), col("m.ts_us").as("ts_us"),
           col("m.event_id").as("event_id"), col("m.value").as("value"))
       streamDirs("st_upsert") { (srcDir, ckpt) =>
-        stageDelivery(raw.where(col("ts_us") <= cut).drop("ts_us"), srcDir, "delivery1.parquet")
-        stageDelivery(raw.where(col("ts_us") > cut).drop("ts_us"), srcDir, "delivery2.parquet")
+        stageDelivery(raw.where(col("ts") <= cut), srcDir, "delivery1.parquet")
+        stageDelivery(raw.where(col("ts") > cut), srcDir, "delivery2.parquet")
         drain(s.readStream.schema(graft.tables.Tables.rawEventsSchema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
@@ -642,10 +651,8 @@ object StreamingOps {
       Housekeeping.tempViewBounded("st_backfill", s, qn)
       val raw = graft.tables.Tables.events(s, d)
       // deterministic day-boundary split: midpoint of the event-time span,
-      // floored to a UTC day (two bounded scalars)
-      val cutDay = java.time.Instant.ofEpochSecond(
-          midpointMicros(raw, unix_micros(col("ts"))) / 1000000L)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate
+      // floored to a UTC day
+      val cutDay = tsMidpoint(d).toLocalDate
       val batchHalf = raw.where(to_date(col("ts")) < lit(cutDay))
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
@@ -716,11 +723,10 @@ object StreamingOps {
     (s, d) => {
       val root = Housekeeping.boundedScratch("st_manifest")
       val raw = graft.tables.Tables.rawEvents(s, d)
-        .withColumn("ts_us", unix_micros(graft.tables.Tables.ntzColToTimestamp("ts")))
-      val cut = midpointMicros(raw, col("ts_us"))
+      val cut = lit(tsMidpoint(d))
       streamDirs("st_manifest") { (srcDir, ckpt) =>
-        stageDelivery(raw.where(col("ts_us") <= cut).drop("ts_us"), srcDir, "delivery1.parquet")
-        stageDelivery(raw.where(col("ts_us") > cut).drop("ts_us"), srcDir, "delivery2.parquet")
+        stageDelivery(raw.where(col("ts") <= cut), srcDir, "delivery1.parquet")
+        stageDelivery(raw.where(col("ts") > cut), srcDir, "delivery2.parquet")
         drain(s.readStream.schema(graft.tables.Tables.rawEventsSchema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)
@@ -1501,8 +1507,9 @@ object StreamingOps {
                     // driver round-trip replaces the old isEmpty action)
                     val newdictKeys = newdict.select(shingleBucketKey(col("s")).as("k"))
                       .distinct().collect().map(_.getLong(0)).toSeq
-                    // pool lane: gated docs' shingle arrays (cached — the
-                    // InferFiltersFromGenerate recompute trap, LlmOps)
+                    // pool lane: gated docs' shingle arrays, cached per
+                    // batch (the InferFiltersFromGenerate recompute trap,
+                    // see LlmOps.shingleOccurrences)
                     val shArr = LlmOps.shingleArrays(gated.select("doc_id", "text")).cache()
                     try {
                       // docstate: one narrow row per gated doc, written once

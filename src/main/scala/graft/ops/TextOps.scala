@@ -108,7 +108,7 @@ object TextOps {
       // table and the fp explode), so it MUST be materialized: an uncached
       // posexplode lets InferFiltersFromGenerate re-derive the whole
       // O(words²) hash tree inside the injected not-null/size filter — the
-      // same trap documented on LlmOps.shingleRows (measured here: 0.4 s →
+      // same trap documented on LlmOps.shingleOccurrences (measured here: 0.4 s →
       // 4.1 s at sf0.1 when the cache barrier was briefly dropped).
       val base = Housekeeping.cacheBounded("fp_base", Tables.documents(s, d)
         .withColumn("words", words)

@@ -58,7 +58,8 @@ class DedupScaleSpec extends AnyFunSuite {
   /** Σ df·(df−1)/2 — the exact shingle self-join's row count, straight from
     * the document-frequency table. */
   private def joinWork(docs: DataFrame, cutoff: Option[Int]): Long = {
-    val df = LlmOps.shingleRows(docs).groupBy("s").agg(count(lit(1)).as("df"))
+    val df = LlmOps.shingleOccurrences("spec_join_work", docs)
+      .groupBy("s").agg(count(lit(1)).as("df"))
     val kept = cutoff.fold(df)(c => df.where(col("df") <= c))
     // Column./ is double division — sum df·(df−1) exactly in long, halve on the driver
     kept.agg(coalesce(sum(col("df") * (col("df") - 1)), lit(0L))).first().getLong(0) / 2

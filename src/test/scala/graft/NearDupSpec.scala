@@ -155,16 +155,20 @@ class NearDupSpec extends AnyFunSuite {
     }
   }
 
-  test("containment: subset doc flagged one-way where Jaccard stays silent") {
+  /** A short doc, a long doc quoting it wholesale, and an unrelated doc. */
+  private def subsetFixture() = {
     import spark.implicits._
     val quote = "alpha beta gamma delta epsilon zeta eta theta"        // 6 shingles
     val filler = (1 to 60).map(i => s"w$i").mkString(" ")              // 58 unique shingles
-    val docs = Seq(
+    Seq(
       (1L, quote),                    // the short doc
       (2L, s"$quote $filler"),        // long doc quoting it wholesale
       (3L, "iota kappa lambda mu nu xi omicron pi")                    // unrelated
     ).toDF("doc_id", "text")
+  }
 
+  test("containment: subset doc flagged one-way where Jaccard stays silent") {
+    val docs = subsetFixture()
     val got = LlmOps.containmentPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4)))
     graft.ops.Housekeeping.releaseAll()
@@ -182,6 +186,67 @@ class NearDupSpec extends AnyFunSuite {
     graft.ops.Housekeeping.releaseAll()
     assert(!jac.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L),
       "the containment pair must be invisible to symmetric Jaccard")
+  }
+
+  /** Jaccard and containment are two rules over one overlap stage: every
+    * Jaccard row equals inter / (na + nb − inter) from the containment rows
+    * of the same pair in both orientations (containment at 0 % keeps every
+    * overlapping ordered pair), and every such pair at J ≥ 0.5 is a
+    * Jaccard row. */
+  test("Jaccard rows equal inter / (na + nb - inter) from both containment orientations") {
+    val corpora = Seq("subset" -> subsetFixture(), "near-dup" -> fixture(),
+      "sf0.001" -> graft.tables.Tables.documents(spark, TestSpark.sf0001))
+    for ((name, docs) <- corpora) {
+      val cont = LlmOps.containmentPairs(docs, 0L).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+      graft.ops.Housekeeping.releaseAll()
+      val jac = LlmOps.ngramPairs(docs).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      graft.ops.Housekeeping.releaseAll()
+      val fromCont = cont.collect { case ((a, b), (na, inter)) if a < b =>
+        val (nb, interBack) = cont((b, a))
+        assert(interBack == inter, s"$name: ($a, $b) shares $inter one way, $interBack back")
+        (a, b) -> inter.toDouble / (na + nb - inter)
+      }.filter(_._2 >= 0.5)
+      assert(jac.nonEmpty || name == "subset", s"$name: no Jaccard rows to compare")
+      assert(jac == fromCont, s"$name: Jaccard ${jac.toSeq.sorted} vs containment " +
+        s"${fromCont.toSeq.sorted}")
+    }
+  }
+
+  /** The InferFiltersFromGenerate guard: the one shingle explode reads the
+    * cached per-doc arrays, so the not-null/size filter Catalyst injects
+    * under the generator never re-derives the shingle tree from `split`.
+    * Control: the same explode over the uncached arrays does. */
+  test("shingleOccurrences explodes the cached shingle arrays") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions.{col, explode}
+    val docs = graft.tables.Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
+    def generator(plan: LogicalPlan): Generate = {
+      val gs = plan.collect { case g: Generate => g }
+      assert(gs.size == 1, s"expected one Generate:\n$plan")
+      gs.head
+    }
+    def input(p: LogicalPlan): LogicalPlan = p match {
+      case Filter(_, c) => input(c)
+      case Project(_, c) => input(c)
+      case other => other
+    }
+    def splitsUnder(g: Generate): Int =
+      g.child.collect { case f: Filter => f.condition.collect { case e: StringSplit => e }.size }.sum
+
+    val occ = LlmOps.shingleOccurrences("spec_occurrences", docs)
+    val g = generator(occ.queryExecution.optimizedPlan)
+    assert(input(g.child).isInstanceOf[InMemoryRelation], s"Generate input:\n${g.child}")
+    assert(splitsUnder(g) == 0, s"split re-derived under the generator:\n${g.child}")
+    assert(occ.columns.toSeq == Seq("doc_id", "s"))
+    graft.ops.Housekeeping.releaseAll()
+
+    val uncached = LlmOps.shingleArrays(docs).select(col("doc_id"), explode(col("shingles")).as("s"))
+    assert(splitsUnder(generator(uncached.queryExecution.optimizedPlan)) > 0,
+      "control: the uncached explode no longer shows the trap")
   }
 
   test("near-dedup is idempotent on the real documents table") {

@@ -40,6 +40,20 @@ class StreamRestartSpec extends AnyFunSuite {
     q.awaitTermination()
   }
 
+  /** The two-delivery keys split at `tsMidpoint`, read from the events
+    * file's footer: it must be the exact integer midpoint the min/max
+    * aggregate over `unix_micros(ts)` gives. */
+  test("footer split point equals the aggregate midpoint at every sf") {
+    for (d <- Seq(TestSpark.sf0001, TestSpark.sf001, TestSpark.sf01)) {
+      val b = graft.tables.Tables.events(spark, d)
+        .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).first()
+      val expected = b.getLong(0) / 2 + b.getLong(1) / 2
+      val got = java.time.temporal.ChronoUnit.MICROS.between(
+        java.time.LocalDateTime.of(1970, 1, 1, 0, 0), StreamingOps.tsMidpoint(d))
+      assert(got == expected, s"$d: footer midpoint $got, aggregate midpoint $expected")
+    }
+  }
+
   test("restart resumes from the checkpoint and keeps exactly-once; checkpoint loss breaks it") {
     val root = Files.createTempDirectory("stream_restart_spec")
     try {
